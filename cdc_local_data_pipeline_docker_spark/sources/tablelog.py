@@ -66,18 +66,35 @@ Design choices, and where they sit on the production spectrum:
   per-file bloom position-sets for requested bloom columns (point
   pruning via ``log_read(point=...)``) — the bloom answers "might this
   file contain key k" for hash-scattered keys where min/max spans are
-  useless. Blooms are built in the same one-pass distributed
-  aggregation as the min/max stats; positions are double-hashed from
-  `xxhash64` so the driver can re-derive a probe's positions exactly.
+  useless. Min/max come from the written files' parquet footers, read
+  on the driver (KB per file, no Spark job); blooms from one
+  aggregation over the new live files, run only when the table has
+  bloom columns; positions are double-hashed from `xxhash64` so the
+  driver can re-derive a probe's positions exactly.
+* **One write per commit.** Every commit writes its data in ONE Spark
+  job (`_write_data_files`): a CoW/MoR commit's live files and its
+  commit-time change images (pre/post/insert) come out of the same
+  job, partitioned by a role column. Files stay where Spark wrote
+  them — the manifest lists every path and readers never list
+  directories — so a commit's cost is set by that one job, not by a
+  job per output.
 * **Compaction is just another commit** that replaces many small files
   with few big ones — content-identical, so time travel across an
   OPTIMIZE is seamless and a concurrent reader on the old version
   still resolves its files (VACUUM honors a version-retention floor).
 * **Crash safety**: a writer dying after data files but before the
   manifest leaves orphans that no reader can see; `log_vacuum`
-  deletes any data file not referenced by a retained manifest, and
-  writes a fresh checkpoint first when trimming history would remove
-  the oldest retained version's replay base.
+  deletes any data file not referenced by a retained manifest (and
+  every directory left holding none), and writes a fresh checkpoint
+  first when trimming history would remove the oldest retained
+  version's replay base.
+* **Storage assumptions.** Three steps need more than plain file
+  writes from the store: the put-if-absent manifest publish
+  (`os.link`, above), the checkpoint-directory publish (`os.rename`
+  of a fully written temp dir) and the `_last_checkpoint` pointer
+  swap (`os.replace`). Data files are never renamed: they are
+  written once, under a per-attempt token directory, and only ever
+  deleted by `log_vacuum`.
 
 Everything data-sized runs through Spark (`df.write.parquet`,
 snapshot reads over the manifest's file list); only manifests and
@@ -143,6 +160,10 @@ _DATA_DIR = "data"
 #: hidden physical column materializing a row's id through rewrites
 #: (Delta ROW LINEAGE) — never surfaced by any read path
 _ROWID_COL = "_tl_row_id"
+#: base name of the role column ('live' | 'pre' | 'post' | 'ins') that
+#: steers each row of a commit's single write to its output; suffixed
+#: per write so it never collides with a frame column (see _fresh_col)
+_COW_TAG = "_tl_cdf_tag"
 
 #: Commits between parquet checkpoints (Delta's default cadence).
 CHECKPOINT_INTERVAL = 10
@@ -1224,6 +1245,135 @@ def _bloom_positions(spark: SparkSession, value) -> list[int]:
     return [(h1 + i * h2o) % BLOOM_BITS for i in range(BLOOM_PROBES)]
 
 
+def _fresh_col(base: str, taken) -> str:
+    """``base``, suffixed until it names none of ``taken`` — the name
+    of an internal role/flag column, which must never collide with a
+    frame column."""
+    taken = set(taken)
+    name, i = base, 0
+    while name in taken:
+        i += 1
+        name = f"{base}_{i}"
+    return name
+
+
+def _nan_last(v):
+    """Sort key placing NaN above every other value."""
+    return (v != v, v)
+
+
+def _footer_stats(path: str, cols: list[str]) -> dict[str, list]:
+    """Per-column [min, max] of one parquet file, read from its footer
+    on the driver (KB per file) and combined across row groups — equal
+    to ``min``/``max`` aggregated over the file's rows. A column whose
+    footer holds non-null values but no min/max (a string over the
+    writer's 4 KB statistics cap) is left out, so the file never prunes
+    on it; an all-null column records [None, None]; a file with no rows
+    records nothing."""
+    import decimal
+
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    if md.num_rows == 0:
+        return {}
+    schema = {
+        md.schema.column(i).path: (i, md.schema.column(i))
+        for i in range(md.num_columns)
+    }
+    out: dict[str, list] = {}
+    for c in cols:
+        if c not in schema:
+            continue
+        i, col = schema[c]
+        # pyarrow cannot convert INT32/INT64-backed decimal statistics:
+        # decode the raw unscaled integers with the column scale
+        int_dec = col.logical_type.type == "DECIMAL" and col.physical_type in (
+            "INT32", "INT64",
+        )
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(i).statistics
+            if st is not None and st.has_min_max:
+                if int_dec:
+                    mn = decimal.Decimal(st.min_raw).scaleb(-col.scale)
+                    mx = decimal.Decimal(st.max_raw).scaleb(-col.scale)
+                else:
+                    mn, mx = st.min, st.max
+                # NaN orders above every number, as in Spark's min/max
+                lo = mn if lo is None else min(lo, mn, key=_nan_last)
+                hi = mx if hi is None else max(hi, mx, key=_nan_last)
+            elif not (
+                st is not None
+                and st.has_null_count
+                and st.null_count == rg.num_rows
+            ):
+                break  # values without min/max: no stats for this file
+        else:
+            out[c] = [_json_val(lo), _json_val(hi)]
+    return out
+
+
+def _table_meta_cols(state: dict) -> tuple[list[str], list[str]]:
+    """(stats columns, bloom columns) the table's live files record — a
+    rewrite records the same metadata for its new files."""
+    return (
+        sorted({c for s in state["stats"].values() for c in s}),
+        sorted({c for b in state["blooms"].values() for c in b}),
+    )
+
+
+def _aggregate_file_meta(
+    spark: SparkSession,
+    root: str,
+    files: list[str],
+    types: dict[str, str],
+    stats_cols: list[str],
+    bloom_cols: list[str],
+) -> tuple[dict[str, dict[str, list]], dict[str, dict[str, list]]]:
+    """(per-file min/max for ``stats_cols``, per-file bloom position
+    sets for ``bloom_cols``) from ONE distributed aggregation over
+    ``files`` grouped by ``input_file_name()``; ``types`` maps column
+    -> Spark type name. No job runs when both column lists are empty."""
+    stats: dict[str, dict[str, list]] = {}
+    blooms: dict[str, dict[str, list]] = {}
+    if not files or not (stats_cols or bloom_cols):
+        return stats, blooms
+    from pyspark.sql import functions as F
+
+    aggs = []
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
+    for c in bloom_cols:
+        arr = _bloom_position_cols(c, types[c] == "string")
+        aggs.append(
+            F.array_distinct(F.flatten(F.collect_list(arr))).alias(f"bl_{c}")
+        )
+    rows = (
+        spark.read.parquet(*[os.path.join(root, f) for f in files])
+        .groupBy(F.input_file_name().alias("_f"))
+        .agg(*aggs)
+        .collect()
+    )
+    idx = _rel_index(root, files)
+    for r in rows:
+        key = os.path.normpath(os.path.abspath(_uri_to_path(r["_f"])))
+        tail = idx.get(key) or next(
+            (p for p in files if key.endswith(p)), None
+        )
+        if tail is None:
+            continue
+        if stats_cols:
+            stats[tail] = {
+                c: [_json_val(r[f"mn_{c}"]), _json_val(r[f"mx_{c}"])]
+                for c in stats_cols
+            }
+        if bloom_cols:
+            blooms[tail] = {c: sorted(r[f"bl_{c}"]) for c in bloom_cols}
+    return stats, blooms
+
+
 def _write_data_files(
     df: DataFrame,
     root: str,
@@ -1231,17 +1381,29 @@ def _write_data_files(
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     transforms: list[tuple[str, int | None, str]] | None = None,
+    tag: str | None = None,
 ) -> tuple[
-    list[str],
+    list[str] | dict[str, list[str]],
     dict[str, dict[str, list]],
     dict[str, dict[str, list]],
     dict[str, dict],
 ]:
-    """Write ``df`` under data/<token>/; return (root-relative part
-    files, per-file min/max stats for ``stats_cols``, per-file bloom
-    position sets for ``bloom_cols``, per-file partition values for
-    ``transforms``). The directory is unique per commit attempt, so a
-    losing/crashed writer never collides with a winner's files.
+    """Write ``df`` under data/<token>/ in ONE Spark job; return (the
+    root-relative part files, per-file min/max stats for
+    ``stats_cols``, per-file bloom position sets for ``bloom_cols``,
+    per-file partition values for ``transforms``). The directory is
+    unique per commit attempt, so a losing/crashed writer never
+    collides with a winner's files. This is the only way a commit
+    writes data.
+
+    ``tag`` names a role column of ``df`` ('live' | 'pre' | 'post' |
+    'ins'): one commit's live files AND its change images come out of
+    the same job, partitioned by role, and the first return value is
+    {role: sorted files} (a role with no rows is absent). Stats,
+    blooms and partition values describe the 'live' files only —
+    change images are never pruned. Files stay where Spark wrote them
+    (``<tag>=<role>/`` directories): the manifest lists every path and
+    readers never list directories.
 
     ``transforms`` is the hidden-partitioning spec: parsed
     (kind, n, physical_col) triples. Each derives a write-only column
@@ -1251,23 +1413,24 @@ def _write_data_files(
     parsed back out of the directory path into the manifest, where the
     read path prunes on it BEFORE min/max and bloom skipping.
 
-    Stats AND blooms come from ONE distributed aggregation over the
-    just-written files grouped by ``input_file_name()`` — KBs of
-    manifest state per thousand files, the Delta/Iceberg file-skipping
-    shape. Only JSON-stable column types participate; anything else is
-    skipped (its files simply never prune)."""
+    Min/max come from the written files' parquet footers, read on the
+    driver (no Spark job); blooms from one aggregation over the live
+    files grouped by ``input_file_name()``, run only when bloom
+    columns are requested. Only JSON-stable column types participate;
+    anything else is skipped (its files simply never prune)."""
     out_dir = os.path.join(root, _DATA_DIR, token)
-    rel: list[str] = []
-    parts: dict[str, dict] = {}
+    out = df
+    pcols = [tag] if tag else []
+    name_to_key: dict[str, str] = {}
     if transforms:
-        pnames = [f"_tlp_{i}" for i in range(len(transforms))]
-        pkeys = [_transform_key(*t) for t in transforms]
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        out = df
-        for name, t in zip(pnames, transforms):
+        for i, t in enumerate(transforms):
+            name = f"_tlp_{i}"
             out = out.withColumn(
                 name, _transform_expr(*t, dtype=types.get(t[2]))
             )
+            name_to_key[name] = _transform_key(*t)
+        pcols += list(name_to_key)
         # Hash-distribute by the partition values before the write
         # (Iceberg's write.distribution-mode=hash; guide §6): without
         # it EVERY input task opens a writer for EVERY partition value
@@ -1283,81 +1446,41 @@ def _write_data_files(
         n_shuffle = int(
             out.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
-        out = out.repartition(n_shuffle, *pnames)
-        out.write.mode("error").partitionBy(*pnames).parquet(out_dir)
-        name_to_key = dict(zip(pnames, pkeys))
-        for dirpath, _dirs, fnames in os.walk(out_dir):
-            vals: dict[str, object] = {}
-            for comp in os.path.relpath(dirpath, out_dir).split(os.sep):
-                name, _, raw = comp.partition("=")
-                if name in name_to_key:
-                    vals[name_to_key[name]] = _part_value_from_dir(raw)
-            for f in sorted(fnames):
-                if f.endswith(".parquet"):
-                    r = os.path.relpath(os.path.join(dirpath, f), root)
-                    rel.append(r)
-                    if vals:
-                        parts[r] = dict(vals)
-        rel.sort()
-    else:
-        df.write.mode("error").parquet(out_dir)
-        for f in sorted(os.listdir(out_dir)):
+        out = out.repartition(n_shuffle, *pcols)
+    w = out.write.mode("error")
+    (w.partitionBy(*pcols) if pcols else w).parquet(out_dir)
+    files: dict[str, list[str]] = {}
+    parts: dict[str, dict] = {}
+    for dirpath, _dirs, fnames in os.walk(out_dir):
+        role, vals = "live", {}
+        for comp in os.path.relpath(dirpath, out_dir).split(os.sep):
+            name, _, raw = comp.partition("=")
+            if name == tag:
+                role = raw
+            elif name in name_to_key:
+                vals[name_to_key[name]] = _part_value_from_dir(raw)
+        for f in fnames:
             if f.endswith(".parquet"):
-                rel.append(os.path.join(_DATA_DIR, token, f))
+                r = os.path.relpath(os.path.join(dirpath, f), root)
+                files.setdefault(role, []).append(r)
+                if vals and role == "live":
+                    parts[r] = dict(vals)
+    for rel in files.values():
+        rel.sort()
+    live = files.get("live", [])
+    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    keep = [c for c in stats_cols or [] if types.get(c) in _STATS_TYPES]
     stats: dict[str, dict[str, list]] = {}
-    blooms: dict[str, dict[str, list]] = {}
-    if (stats_cols or bloom_cols) and rel:
-        from pyspark.sql import functions as F
-
-        spark = df.sparkSession
-        back = spark.read.parquet(out_dir)
-        types = {f.name: f.dataType.typeName() for f in back.schema.fields}
-        keep = [
-            c
-            for c in (stats_cols or [])
-            if types.get(c) in _STATS_TYPES
-        ]
-        keep_b = [
-            c
-            for c in (bloom_cols or [])
-            if types.get(c) in _BLOOM_TYPES
-        ]
-        if keep or keep_b:
-            aggs = []
-            for c in keep:
-                aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-            for c in keep_b:
-                arr = _bloom_position_cols(c, types[c] == "string")
-                aggs.append(
-                    F.array_distinct(F.flatten(F.collect_list(arr))).alias(
-                        f"bl_{c}"
-                    )
-                )
-            rows = (
-                back.groupBy(F.input_file_name().alias("_f"))
-                .agg(*aggs)
-                .collect()
-            )
-            idx = _rel_index(root, rel)
-            for r in rows:
-                key = os.path.normpath(
-                    os.path.abspath(_uri_to_path(r["_f"]))
-                )
-                tail = idx.get(key) or next(
-                    (p for p in rel if key.endswith(p)), None
-                )
-                if tail is None:
-                    continue
-                if keep:
-                    stats[tail] = {
-                        c: [_json_val(r[f"mn_{c}"]), _json_val(r[f"mx_{c}"])]
-                        for c in keep
-                    }
-                if keep_b:
-                    blooms[tail] = {
-                        c: sorted(r[f"bl_{c}"]) for c in keep_b
-                    }
-    return rel, stats, blooms, parts
+    if keep:
+        for f in live:
+            s = _footer_stats(os.path.join(root, f), keep)
+            if s:
+                stats[f] = s
+    keep_b = [c for c in bloom_cols or [] if types.get(c) in _BLOOM_TYPES]
+    _, blooms = _aggregate_file_meta(
+        df.sparkSession, root, live, types, [], keep_b
+    )
+    return (files if tag else live), stats, blooms, parts
 
 
 # ---------------------------------------------------------------------------
@@ -2239,7 +2362,7 @@ def log_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     if base is None:
         raise ValueError(f"no table at {root}")
     state = _snapshot(root, base)
-    live, dvs, colmap = state["live"], state["dv"], state["colmap"]
+    dvs, colmap = state["dv"], state["colmap"]
     merge = len(state["schemas"]) > 1
     candidates = _cow_candidate_files(spark, state, predicate)
     affected: list[str] = []
@@ -2292,61 +2415,32 @@ def log_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
         live_logical = _materialize_lineage(
             spark, root, live_logical, base
         ).drop("_fpn", "_ri")
-    survivors = _to_physical_loose(
-        live_logical.filter(~F.expr(predicate)), colmap
+    # survivors ('live') and the commit-time change file ('pre': the
+    # DELETED rows, live matches only — prior dead rows were their own
+    # commits' changes) from ONE scan and ONE write, so the change feed
+    # never replays the rewritten files' carried rows (CDF volume =
+    # deleted rows, not file churn). A NULL predicate row gets no role
+    # and is dropped — exactly the `pred`/`~pred` filter pair's
+    # behavior (both drop NULL).
+    tag = _fresh_col(
+        _COW_TAG, [*live_logical.columns, *(colmap or {}).values()]
     )
+    p = F.expr(predicate)
+    tagged = _to_physical_loose(
+        live_logical.withColumn(
+            tag, F.when(p, "pre").when(~p, "live")
+        ).filter(F.col(tag).isNotNull()),
+        colmap,
+    )
+    survivors = tagged.drop(tag)
     token = uuid.uuid4().hex[:12]
-    stats_cols = sorted({c for s in state["stats"].values() for c in s})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
-    transforms = _rewrite_transforms(state, affected, survivors)
-    # commit-time change file: the DELETED rows (live matches only —
-    # prior dead rows were their own commits' changes) as an exact
-    # 'delete' image, so the change feed never replays the rewritten
-    # files' carried rows (CDF volume = deleted rows, not file churn)
-    if (
-        transforms is None
-        and not stats_cols
-        and not bloom_cols
-        and not lineage
-        and _cow_tag_safe(live_logical.columns, colmap)
-    ):
-        # single-pass commit (r13, guide §1.2/§2.3): survivors and the
-        # delete pre-image from ONE scan of the affected files instead
-        # of two. A NULL predicate row lands in NEITHER branch (the
-        # explode of a NULL array emits nothing) — exactly the two
-        # filters' behavior (`pred` and `~pred` both drop NULL).
-        def _branch(t):
-            return F.struct(
-                F.lit(t).alias(_COW_TAG),
-                *[
-                    F.col(c).alias((colmap or {}).get(c, c))
-                    for c in live_logical.columns
-                ],
-            )
-
-        p = F.expr(predicate)
-        arr = F.when(p, F.array(_branch("pre"))).when(
-            ~p, F.array(_branch("live"))
-        )
-        tagged = live_logical.select(F.explode(arr).alias("_s")).select(
-            "_s.*"
-        )
-        files = _write_cow_tagged(tagged, root, token, ["live", "pre"])
-        added, cdf_pre = files["live"], files["pre"]
-        new_stats, new_blooms, new_parts = {}, {}, {}
-    else:
-        added, new_stats, new_blooms, new_parts = _write_data_files(
-            survivors, root, token, stats_cols, bloom_cols,
-            transforms=transforms,
-        )
-        cdf_pre = _write_cdf_sidecar(
-            _to_physical_loose(
-                live_logical.filter(F.expr(predicate)), colmap
-            ),
-            root,
-            token,
-            "pre",
-        )
+    stats_cols, bloom_cols = _table_meta_cols(state)
+    files, new_stats, new_blooms, new_parts = _write_data_files(
+        tagged, root, token, stats_cols, bloom_cols,
+        transforms=_rewrite_transforms(state, affected, survivors),
+        tag=tag,
+    )
+    added, cdf_pre = files.get("live", []), files.get("pre", [])
     manifest = {
         "version": base + 1,
         "action": "delete",
@@ -2395,7 +2489,7 @@ def log_update_where(
     if base is None:
         raise ValueError(f"no table at {root}")
     state = _snapshot(root, base)
-    live, dvs, colmap = state["live"], state["dv"], state["colmap"]
+    dvs, colmap = state["dv"], state["colmap"]
     merge = len(state["schemas"]) > 1
     logical_cols = (
         list(colmap) if colmap else _physical_columns(root, state)
@@ -2455,120 +2549,75 @@ def log_update_where(
         ).drop("_fpn", "_ri")
     types = {f.name: f.dataType for f in rewritten.schema.fields}
     out_cols = list(rewritten.columns)
+    taken = [*out_cols, *(colmap or {}).values()]
+    upd = _fresh_col("_tl_upd", taken)
+    tag = _fresh_col(_COW_TAG, [*taken, upd])
     # the match bit is computed ONCE against the PRE-update image and
     # carried as a marker column: assignments, constraint validation,
-    # and the CDF sidecars must all agree on which rows matched — a
+    # and the CDF images must all agree on which rows matched — a
     # post-hoc re-filter on the predicate would bind POST-update values
     # (an update that modifies a predicate column would escape its own
     # constraint check and mislabel its change feed)
-    pre = rewritten.withColumn("__tl_upd", F.expr(predicate))
+    pre = rewritten.withColumn(upd, F.expr(predicate))
+
     # ONE simultaneous projection, not sequential withColumns: every
     # assignment's RHS must bind the PRE-update row image (SQL UPDATE
     # semantics are all-at-once)
-    assigned = {
-        col: F.when(F.col("__tl_upd"), F.expr(expr).cast(types[col]))
-        .otherwise(F.col(col))
-        .alias(col)
-        for col, expr in assignments.items()
-    }
-    post = pre.select(
-        *[assigned.get(c, F.col(c)) for c in out_cols], F.col("__tl_upd")
-    )
+    def _assigned(cond):
+        return [
+            F.when(cond, F.expr(assignments[c]).cast(types[c]))
+            .otherwise(F.col(c))
+            .alias(c)
+            if c in assignments
+            else F.col(c)
+            for c in out_cols
+        ]
+
     # constraints gate the rewrite before any file lands — only the
     # UPDATED rows can newly violate, so validate just that slice
     if state["constraints"]:
         _validate_constraints(
-            post.filter("__tl_upd").drop("__tl_upd"), state["constraints"]
+            pre.filter(F.col(upd)).select(*_assigned(F.lit(True))),
+            state["constraints"],
         )
-    survivors = _to_physical_loose(post.drop("__tl_upd"), colmap)
-    token = uuid.uuid4().hex[:12]
-    stats_cols = sorted({c for s in state["stats"].values() for c in s})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
-    transforms = _rewrite_transforms(state, affected, survivors)
-    # COMMIT-TIME CHANGE FILES (the Delta CDC design): the matched
-    # rows' pre/post images land as sidecar parquet under the commit's
-    # own token dir — the change-feed reader then serves EXACT
+    # COMMIT-TIME CHANGE FILES (the Delta CDC design): every row yields
+    # its 'live' post-image; a matched row also yields its 'pre' and
+    # 'post' change images — all from ONE scan of the affected files
+    # and ONE write. The change-feed reader then serves EXACT
     # update_preimage / update_postimage rows for this commit and the
-    # carried (unmatched) rows of rewritten files emit nothing. The
-    # images are row-identical slices the update already computed; at
-    # 100 TB the sidecar cost tracks the MATCHED rows, the CDF read
-    # cost drops from rewritten-file volume to changed-row volume.
-    if (
-        transforms is None
-        and not stats_cols
-        and not bloom_cols
-        and not lineage
-        and _cow_tag_safe(out_cols, colmap)
-    ):
-        # single-pass commit (r13, guide §1.2/§2.3): survivors AND both
-        # change images from ONE scan of the affected files — the
-        # 3-write form re-scanned them once per output. Every row
-        # yields its 'live' post-image; a matched row additionally
-        # yields the 'pre'/'post' change images. Stats/bloom/partition
-        # rewrites and lineage keep the multi-write path (they need
-        # the plain survivor layout or a second aggregation anyway).
-        def _val(c, post_image):
-            if post_image and c in assignments:
-                return (
-                    F.when(
-                        F.col("__tl_upd"),
-                        F.expr(assignments[c]).cast(types[c]),
-                    ).otherwise(F.col(c))
-                )
-            return F.col(c)
-
-        def _branch(t, post_image):
-            return F.struct(
-                F.lit(t).alias(_COW_TAG),
-                *[
-                    _val(c, post_image).alias((colmap or {}).get(c, c))
-                    for c in out_cols
-                ],
-            )
-
-        arr = F.when(
-            F.col("__tl_upd"),
-            F.array(
-                _branch("live", True),
-                _branch("pre", False),
-                _branch("post", True),
-            ),
-        ).otherwise(F.array(_branch("live", True)))
-        tagged = pre.select(F.explode(arr).alias("_s")).select("_s.*")
-        files = _write_cow_tagged(
-            tagged, root, token, ["live", "pre", "post"]
-        )
-        added, pre_files, post_files = (
-            files["live"], files["pre"], files["post"],
-        )
-        new_stats, new_blooms, new_parts = {}, {}, {}
-    else:
-        added, new_stats, new_blooms, new_parts = _write_data_files(
-            survivors, root, token, stats_cols, bloom_cols,
-            transforms=transforms,
-        )
-        pre_files = _write_cdf_sidecar(
-            _to_physical_loose(
-                pre.filter("__tl_upd").drop("__tl_upd"), colmap
-            ),
-            root,
-            token,
-            "pre",
-        )
-        post_files = _write_cdf_sidecar(
-            _to_physical_loose(
-                post.filter("__tl_upd").drop("__tl_upd"), colmap
-            ),
-            root,
-            token,
-            "post",
-        )
+    # carried (unmatched) rows of rewritten files emit nothing; the
+    # image cost tracks the MATCHED rows. A NULL-match row passes
+    # through unmodified with no image.
+    roles = pre.withColumn(
+        tag,
+        F.explode(
+            F.when(
+                F.col(upd), F.array(*map(F.lit, ("live", "pre", "post")))
+            ).otherwise(F.array(F.lit("live")))
+        ),
+    )
+    tagged = _to_physical_loose(
+        roles.select(
+            *_assigned(F.col(upd) & (F.col(tag) != "pre")), F.col(tag)
+        ),
+        colmap,
+    )
+    survivors = tagged.drop(tag)
+    token = uuid.uuid4().hex[:12]
+    stats_cols, bloom_cols = _table_meta_cols(state)
+    files, new_stats, new_blooms, new_parts = _write_data_files(
+        tagged, root, token, stats_cols, bloom_cols,
+        transforms=_rewrite_transforms(state, affected, survivors),
+        tag=tag,
+    )
+    added = files.get("live", [])
+    pre_files, post_files = files.get("pre", []), files.get("post", [])
     manifest = {
         "version": base + 1,
         "action": "update",
         **_rowid_fields(root, state, added),
         "add": added + pre_files + post_files,
-        "live_add": added,  # sidecars ride `add` for accounting only
+        "live_add": added,  # change images ride `add` for accounting only
         "cdf_pre": pre_files,
         "cdf_post": post_files,
         "remove": affected,
@@ -2582,73 +2631,6 @@ def log_update_where(
         "ts": time.time(),
     }
     return _commit(root, base + 1, manifest)
-
-
-def _write_cdf_sidecar(
-    df: DataFrame, root: str, token: str, tag: str
-) -> list[str]:
-    """Write one change-image slice as parquet under the commit token's
-    ``_cdf_<tag>`` dir; returns root-relative file paths (possibly
-    empty). Distributed write — image size tracks matched rows. The
-    hidden lineage column is stripped: CDF rows are logical images."""
-    df = df.drop(_ROWID_COL)
-    rel_dir = os.path.join(_DATA_DIR, token, f"_cdf_{tag}")
-    out = os.path.join(root, rel_dir)
-    df.write.mode("overwrite").parquet(out)
-    return sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(out)
-        if f.endswith(".parquet")
-    )
-
-
-#: Tag column steering each row of a single-pass copy-on-write job to
-#: its output role; never lands in file content (partitionBy drops it).
-_COW_TAG = "_tl_cdf_tag"
-
-
-def _cow_tag_safe(cols, colmap) -> bool:
-    """Single-pass fast-path gate guard (ADVICE r13): the tagged write
-    steers rows via a ``_COW_TAG`` struct field, so a table whose
-    physical schema already carries a column of that name would build a
-    duplicate-field struct (loud AnalysisException, not corruption —
-    but the commit should succeed, via the multi-write path)."""
-    return _COW_TAG not in {(colmap or {}).get(c, c) for c in cols}
-
-
-def _write_cow_tagged(
-    tagged: DataFrame, root: str, token: str, tags: list[str]
-) -> dict[str, list[str]]:
-    """ONE Spark job for a copy-on-write commit's full output: survivor
-    files AND the commit-time change-image sidecars (guide §2.3/§1.2 —
-    the 3-write form scanned the affected files once per output). The
-    input carries ``_COW_TAG`` ('live' | 'pre' | 'post'); the write
-    partitions by it, then the tag directories are promoted to the
-    layout every reader/manifest already expects (live files directly
-    under ``data/<token>/``, sidecars under ``_cdf_pre``/``_cdf_post``)
-    — directory renames on the commit's own token tree, before anything
-    is published. Returns {tag: sorted root-relative files}; a tag with
-    no rows yields an empty list."""
-    out_dir = os.path.join(root, _DATA_DIR, token)
-    tagged.write.mode("error").partitionBy(_COW_TAG).parquet(out_dir)
-    out: dict[str, list[str]] = {t: [] for t in tags}
-    for t in tags:
-        src = os.path.join(out_dir, f"{_COW_TAG}={t}")
-        if not os.path.isdir(src):
-            continue
-        if t == "live":
-            dst, rel_dir = out_dir, os.path.join(_DATA_DIR, token)
-        else:
-            rel_dir = os.path.join(_DATA_DIR, token, f"_cdf_{t}")
-            dst = os.path.join(root, rel_dir)
-            os.makedirs(dst, exist_ok=True)
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                os.rename(os.path.join(src, f), os.path.join(dst, f))
-                out[t].append(os.path.join(rel_dir, f))
-        shutil.rmtree(src, ignore_errors=True)
-        out[t].sort()
-    return out
 
 
 def _reserved_physicals(state: dict) -> set[str]:
@@ -2784,12 +2766,13 @@ def log_merge(
     sized collect. Conflict policy: like delete, MERGE conflicts with
     any concurrent commit, so CommitConflict propagates."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     base = _latest_version(root)
     if base is None:
         raise ValueError(f"no table at {root}")
     state = _snapshot(root, base)
-    live, dvs, colmap = state["live"], state["dv"], state["colmap"]
+    dvs, colmap = state["dv"], state["colmap"]
     # schema evolution: new change columns extend the column map (r12)
     colmap = _extend_colmap(colmap, changes.columns, state)
     merge_sch = len(state["schemas"]) > 1
@@ -2834,11 +2817,9 @@ def log_merge(
             root, probe_files, (r["_fpn"] for r in mkey_rows)
         )
     lineage = bool(state["props"].get("row_lineage"))
-    #: live matched key tuples (exact — the probe applied the vectors);
-    #: == the old matched_pre.select(keys).distinct() without its scan
+    #: live matched key tuples (exact — the probe applied the vectors),
+    #: known without a scan of their own
     mkeys_local = {tuple(r[k] for k in phys_keys) for r in mkey_rows}
-    survivors = None
-    matched_pre = None
     live_rows = None
     if affected:
         # rewrite reads through deletion vectors (dead rows must not
@@ -2851,20 +2832,15 @@ def log_merge(
             live_rows = _materialize_lineage(
                 spark, root, live_rows, base
             ).drop("_fpn", "_ri")
-        survivors = live_rows.join(F.broadcast(keys), phys_keys, "left_anti")
-        # the OLD images of the matched keys — the merge's pre-image
-        # slice (its distinct keys are exactly the change keys that
-        # already existed in the target)
-        matched_pre = live_rows.join(
-            F.broadcast(keys), phys_keys, "left_semi"
-        )
     changes_rows = changes_p
     if lineage:
         # MERGE-matched rows are UPDATES of existing rows: the new
         # images INHERIT the old rows' ids via the (key -> id) map;
         # pure inserts get NULL and draw fresh base+position ids
-        if matched_pre is not None:
-            idmap = matched_pre.select(*phys_keys, _ROWID_COL)
+        if live_rows is not None:
+            idmap = live_rows.join(
+                F.broadcast(keys), phys_keys, "left_semi"
+            ).select(*phys_keys, _ROWID_COL)
             changes_rows = changes_p.join(
                 F.broadcast(idmap), phys_keys, "left"
             )
@@ -2872,148 +2848,72 @@ def log_merge(
             changes_rows = changes_p.withColumn(
                 _ROWID_COL, F.lit(None).cast("long")
             )
-    new_rows = (
-        survivors.unionByName(changes_rows, allowMissingColumns=True)
-        if survivors is not None
-        else changes_rows
-    )
-    token = uuid.uuid4().hex[:12]
-    stats_cols = sorted({c for s in state["stats"].values() for c in s})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
-    transforms = (
-        _rewrite_transforms(state, affected, new_rows) if affected else None
-    )
-    #: the matched-key set as a broadcastable frame (same bounded-change
-    #: budget as `keys` itself); both write paths split changes with it
-    mkeys_df = (
-        spark.createDataFrame(
-            [tuple(t) for t in mkeys_local], keys.schema
-        ).withColumn("_tl_mflag", F.lit(True))
-        if mkeys_local
-        else None
-    )
-    # types must match EXACTLY for the fast path: the tagged union would
-    # otherwise coerce pre/post images to a common type where the
-    # multi-write sidecars kept each side's own (schema drift in the feed)
-    same_types = not affected or (
-        {f.name: f.dataType for f in live_rows.schema.fields}
-        == {f.name: f.dataType for f in changes_p.schema.fields}
-    )
-    if (
-        transforms is None
-        and not stats_cols
-        and not bloom_cols
-        and not lineage
-        and same_types
-        and _cow_tag_safe(new_rows.columns, None)
-        and "_tl_mflag" not in new_rows.columns
-    ):
-        # single-pass tagged commit (r14, guide §1.2/§2.3 — the same
-        # treatment UPDATE/DELETE got in r13): survivor files AND all
-        # three change images from ONE job. The affected-file side
-        # yields 'pre' for matched rows (they leave live; the change
-        # row carries the new image) and 'live' otherwise; every change
-        # row yields its 'live' new image plus 'post' (key existed) or
-        # 'ins' (pure insert). The 4-write form scanned the affected
-        # files once per output (write + pre + post/ins mkey splits).
-        cols = list(new_rows.columns)
+    taken = set(changes_rows.columns)
+    if live_rows is not None:
+        taken.update(live_rows.columns)
+    flag = _fresh_col("_tl_mflag", taken)
+    tag = _fresh_col(_COW_TAG, {*taken, flag})
 
-        def _branch(t):
-            return F.struct(
-                F.lit(t).alias(_COW_TAG), *[F.col(c) for c in cols]
-            )
+    def _flagged(df, key_df):
+        """``df`` left-joined with ``key_df`` (broadcast) plus ``flag``:
+        non-NULL exactly on the rows whose key is in ``key_df``."""
+        return df.join(
+            F.broadcast(key_df.withColumn(flag, F.lit(True))),
+            phys_keys,
+            "left",
+        )
 
-        pieces = []
-        if affected:
-            lr = live_rows.join(
-                F.broadcast(keys.withColumn("_tl_mflag", F.lit(True))),
-                phys_keys,
-                "left",
-            )
-            pieces.append(
-                lr.select(
-                    F.when(
-                        F.col("_tl_mflag").isNotNull(), _branch("pre")
-                    )
-                    .otherwise(_branch("live"))
-                    .alias("_s")
-                )
-            )
-        if mkeys_df is not None:
-            chj = changes_p.join(F.broadcast(mkeys_df), phys_keys, "left")
-            ch_arr = F.when(
-                F.col("_tl_mflag").isNotNull(),
-                F.array(_branch("live"), _branch("post")),
-            ).otherwise(F.array(_branch("live"), _branch("ins")))
-        else:
-            chj = changes_p
-            ch_arr = F.array(_branch("live"), _branch("ins"))
-        pieces.append(chj.select(F.explode(ch_arr).alias("_s")))
-        tagged = pieces[0]
-        for p in pieces[1:]:
-            tagged = tagged.unionByName(p)
-        files = _write_cow_tagged(
-            tagged.select("_s.*"), root, token,
-            ["live", "pre", "post", "ins"],
-        )
-        added, cdf_pre, cdf_post, cdf_ins = (
-            files["live"], files["pre"], files["post"], files["ins"],
-        )
-        new_stats, new_blooms, new_parts = {}, {}, {}
-        # constraints gate on the WRITTEN live files, exactly as below
-        _validate_written_files(
-            spark, root, added, colmap, state["constraints"]
-        )
+    # ONE write for the whole commit: the affected-file side yields
+    # 'pre' for matched rows (they leave live; the change row carries
+    # the new image) and 'live' otherwise; every change row yields its
+    # 'live' new image plus 'post' (key existed) or 'ins' (pure
+    # insert). The matched-key split broadcasts the probe-collected
+    # matched keys, built in the probe's (TABLE) key types — the
+    # values are the table's, whatever the change frame's types.
+    if mkeys_local:
+        key_schema = StructType([probe.schema[k] for k in phys_keys])
+        mkeys_df = spark.createDataFrame(list(mkeys_local), key_schema)
+        chj = _flagged(changes_rows, mkeys_df)
+        image = F.when(F.col(flag).isNotNull(), "post").otherwise("ins")
     else:
-        added, new_stats, new_blooms, new_parts = _write_data_files(
-            new_rows, root, token, stats_cols, bloom_cols,
-            transforms=transforms,
+        chj, image = changes_rows, F.lit("ins")
+    tagged = chj.withColumn(
+        tag, F.explode(F.array(F.lit("live"), image))
+    ).drop(flag)
+    if live_rows is not None:
+        tagged = (
+            _flagged(live_rows, keys)
+            .withColumn(
+                tag,
+                F.when(F.col(flag).isNotNull(), "pre").otherwise("live"),
+            )
+            .drop(flag)
+            .unionByName(tagged, allowMissingColumns=True)
         )
-        # constraints gate on the WRITTEN files (ADVICE r10: validating
-        # the un-materialized `changes` plan evaluated it twice — a
-        # non-deterministic plan could pass yet publish violating rows);
-        # only the incoming rows can newly violate, but the rewrite
-        # output was scanned to be written anyway and nothing publishes
-        # on raise
-        _validate_written_files(
-            spark, root, added, colmap, state["constraints"]
-        )
-        # commit-time change files: matched keys' old/new images as
-        # update_preimage/update_postimage, unmatched change rows as
-        # inserts — the feed serves exact labeled changes and the
-        # carried rows of rewritten files emit nothing. The matched-key
-        # split broadcasts the probe-collected matched keys (r14: the
-        # old form re-derived them from matched_pre, one extra pass
-        # over the affected files per sidecar).
-        if matched_pre is not None:
-            cdf_pre = _write_cdf_sidecar(matched_pre, root, token, "pre")
-            if mkeys_df is not None:
-                cdf_post = _write_cdf_sidecar(
-                    changes_p.join(
-                        F.broadcast(mkeys_df.drop("_tl_mflag")),
-                        phys_keys,
-                        "left_semi",
-                    ),
-                    root,
-                    token,
-                    "post",
-                )
-                cdf_ins = _write_cdf_sidecar(
-                    changes_p.join(
-                        F.broadcast(mkeys_df.drop("_tl_mflag")),
-                        phys_keys,
-                        "left_anti",
-                    ),
-                    root,
-                    token,
-                    "ins",
-                )
-            else:
-                cdf_post = []
-                cdf_ins = _write_cdf_sidecar(changes_p, root, token, "ins")
-        else:
-            cdf_pre, cdf_post = [], []
-            cdf_ins = _write_cdf_sidecar(changes_p, root, token, "ins")
+    new_rows = tagged.drop(tag)
+    token = uuid.uuid4().hex[:12]
+    stats_cols, bloom_cols = _table_meta_cols(state)
+    files, new_stats, new_blooms, new_parts = _write_data_files(
+        tagged, root, token, stats_cols, bloom_cols,
+        transforms=(
+            _rewrite_transforms(state, affected, new_rows)
+            if affected
+            else None
+        ),
+        tag=tag,
+    )
+    added = files.get("live", [])
+    cdf_pre, cdf_post, cdf_ins = (
+        files.get("pre", []), files.get("post", []), files.get("ins", []),
+    )
+    # constraints gate on the WRITTEN live files (ADVICE r10: validating
+    # the un-materialized `changes` plan evaluated it twice — a
+    # non-deterministic plan could pass yet publish violating rows);
+    # only the incoming rows can newly violate, but the rewrite output
+    # was scanned to be written anyway and nothing publishes on raise
+    _validate_written_files(
+        spark, root, added, colmap, state["constraints"]
+    )
     manifest = {
         "version": base + 1,
         "action": "merge",
@@ -3270,11 +3170,21 @@ def log_vacuum(
     for c in _checkpoint_versions(root):
         if c < keep[0] - 1:  # a ckpt at keep[0]-1 still bases keep[0]
             shutil.rmtree(_ckpt_dir(root, c), ignore_errors=True)
-    # drop emptied commit dirs so the data tree stays file-count-sized
-    for d in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
-        p = os.path.join(data_root, d)
-        if os.path.isdir(p) and not os.listdir(p):
-            os.rmdir(p)
+    # drop every directory tree holding no referenced file — dead
+    # commit dirs, their role/partition subdirs, and the writer's
+    # _SUCCESS/.crc leftovers — so the data tree stays file-count-sized
+    live_dirs = set()
+    for f in referenced:
+        d = os.path.dirname(os.path.normpath(f))
+        while d and d not in live_dirs:
+            live_dirs.add(d)
+            d = os.path.dirname(d)
+    for dirpath, dirs, _files in os.walk(data_root):
+        for d in list(dirs):
+            p = os.path.join(dirpath, d)
+            if os.path.relpath(p, root) not in live_dirs:
+                shutil.rmtree(p, ignore_errors=True)
+                dirs.remove(d)
     return sorted(deleted)
 
 
@@ -3825,8 +3735,8 @@ def log_update_where_mor(
     anti-join applies the vectors, the delta file rides ``live_add``.
     The pre-update version stays time-travelable (old vectors and
     files are untouched). CDF: the delta files ARE the post-images, so
-    they double as ``cdf_post`` (zero extra write); only the pre-image
-    sidecar is written, and its size also tracks matched rows.
+    they double as ``cdf_post``; the pre-image change file comes out of
+    the same write, and its size also tracks matched rows.
 
     Same probe, same all-at-once assignment semantics, and the same
     constraint gate as :func:`log_update_where`; the trade is Delta's:
@@ -3866,8 +3776,8 @@ def log_update_where_mor(
     # ONE scan: existing vectors applied (a dead row must not be
     # updated back to life), physical row identity kept for the new
     # vectors; matched rows are a small slice — persist them so the
-    # position collect, the pre-image sidecar, and the post-image
-    # delta all read the slice, not the candidate scan, three times
+    # position collect and the one write read the slice, not the
+    # candidate scan, twice
     matched = (
         _to_logical_loose(
             _fill_missing_physicals(
@@ -3923,72 +3833,48 @@ def log_update_where_mor(
             pre = _materialize_lineage(spark, root, pre, base)
         pre = pre.drop("_fpn", "_ri")
         types = {f.name: f.dataType for f in pre.schema.fields}
+
         # all-at-once assignment over the PRE-update image (every row
         # here matched, so no CASE marker is needed), types pinned
-        post = pre.select(
-            *[
-                F.expr(assignments[c]).cast(types[c]).alias(c)
+        def _assigned(cond):
+            return [
+                F.when(cond, F.expr(assignments[c]).cast(types[c]))
+                .otherwise(F.col(c))
+                .alias(c)
                 if c in assignments
                 else F.col(c)
                 for c in pre.columns
             ]
-        )
+
         # constraint gate before any file lands: only the updated rows
         # can newly violate; the input is materialized parquet, so the
         # written-file re-validation of log_append is not needed
-        _validate_constraints(post, state["constraints"])
-        survivors = _to_physical_loose(post, colmap)
-        stats_cols = sorted(
-            {c for s in state["stats"].values() for c in s}
+        _validate_constraints(
+            pre.select(*_assigned(F.lit(True))), state["constraints"]
         )
-        bloom_cols = sorted(
-            {c for b in state["blooms"].values() for c in b}
+        # ONE write over the persisted matched slice: the delta file
+        # ('live' post-images, which double as cdf_post) AND the
+        # pre-image change file. Data files first: Spark's writer owns
+        # the token dir creation (errorifexists); the pyarrow-written
+        # vectors then land inside.
+        tag = _fresh_col(
+            _COW_TAG, [*pre.columns, *(colmap or {}).values()]
         )
-        lineage = bool(state["props"].get("row_lineage"))
-        transforms = _rewrite_transforms(state, affected, survivors)
-        # data files first: Spark's writer owns the token dir creation
-        # (errorifexists); the pyarrow-written vectors then land inside
-        if (
-            transforms is None
-            and not stats_cols
-            and not bloom_cols
-            and not lineage
-            and _cow_tag_safe(pre.columns, colmap)
-        ):
-            # single tagged write (r14, guide §1.2): the delta file
-            # (post-images, which double as cdf_post) AND the pre-image
-            # sidecar from ONE job over the persisted matched slice —
-            # the 2-write form read the cache once per output
-            def _val(c, post_image):
-                if post_image and c in assignments:
-                    return F.expr(assignments[c]).cast(types[c])
-                return F.col(c)
-
-            def _branch(t, post_image):
-                return F.struct(
-                    F.lit(t).alias(_COW_TAG),
-                    *[
-                        _val(c, post_image).alias((colmap or {}).get(c, c))
-                        for c in pre.columns
-                    ],
-                )
-
-            tagged = pre.select(
-                F.explode(
-                    F.array(_branch("live", True), _branch("pre", False))
-                ).alias("_s")
-            ).select("_s.*")
-            files = _write_cow_tagged(tagged, root, token, ["live", "pre"])
-            added, pre_files = files["live"], files["pre"]
-            new_stats, new_blooms, new_parts = {}, {}, {}
-        else:
-            added, new_stats, new_blooms, new_parts = _write_data_files(
-                survivors, root, token, stats_cols, bloom_cols,
-                transforms=transforms,
-            )
-            pre_files = _write_cdf_sidecar(
-                _to_physical_loose(pre, colmap), root, token, "pre"
-            )
+        roles = pre.withColumn(
+            tag, F.explode(F.array(F.lit("live"), F.lit("pre")))
+        )
+        tagged = _to_physical_loose(
+            roles.select(*_assigned(F.col(tag) == "live"), F.col(tag)),
+            colmap,
+        )
+        survivors = tagged.drop(tag)
+        stats_cols, bloom_cols = _table_meta_cols(state)
+        files, new_stats, new_blooms, new_parts = _write_data_files(
+            tagged, root, token, stats_cols, bloom_cols,
+            transforms=_rewrite_transforms(state, affected, survivors),
+            tag=tag,
+        )
+        added, pre_files = files.get("live", []), files.get("pre", [])
         dv_set, dv_added = (
             _write_deletion_vectors_distributed(
                 spark, root, token, matched.select("_fpn", "_ri"),
@@ -4089,12 +3975,7 @@ def log_merge_mor(
                 matched_pre.select("_fpn", "_ri"), root, probe_files
             )
     try:
-        stats_cols = sorted(
-            {c for s in state["stats"].values() for c in s}
-        )
-        bloom_cols = sorted(
-            {c for b in state["blooms"].values() for c in b}
-        )
+        stats_cols, bloom_cols = _table_meta_cols(state)
         changes_write = changes_p
         if lineage:
             # matched keys' delta rows INHERIT the dying rows' ids
@@ -4107,17 +3988,48 @@ def log_merge_mor(
                 changes_write = changes_p.withColumn(
                     _ROWID_COL, F.lit(None).cast("long")
                 )
-        # data files first: Spark's writer owns the token dir creation;
-        # delta rows derive partition values from their own columns, so
-        # the table-wide shared spec (if any) keeps them prunable
-        added, new_stats, new_blooms, new_parts = _write_data_files(
-            changes_write, root, token, stats_cols, bloom_cols,
-            transforms=_rewrite_transforms(state, live, changes_write)
+        # ONE write, data files first (Spark's writer owns the token
+        # dir creation; the vectors land inside after): every change
+        # row yields its 'live' delta image plus 'post' (key matched a
+        # live row) or 'ins'; the matched old rows yield 'pre'. Delta
+        # rows derive partition values from their own columns, so the
+        # table-wide shared spec (if any) keeps them prunable.
+        taken = set(changes_write.columns)
+        if matched_pre is not None:
+            taken.update(matched_pre.columns)
+        flag = _fresh_col("_tl_mflag", taken)
+        tag = _fresh_col(_COW_TAG, {*taken, flag})
+        image, pre_rows = F.lit("ins"), None
+        if by_file or mor_distributed:
+            matched_keys = matched_pre.select(*phys_keys).distinct()
+            changes_write = changes_write.join(
+                F.broadcast(matched_keys.withColumn(flag, F.lit(True))),
+                phys_keys,
+                "left",
+            )
+            image = F.when(F.col(flag).isNotNull(), "post").otherwise("ins")
+            pre_rows = matched_pre.drop("_fpn", "_ri").withColumn(
+                tag, F.lit("pre")
+            )
+        tagged = changes_write.withColumn(
+            tag, F.explode(F.array(F.lit("live"), image))
+        ).drop(flag)
+        if pre_rows is not None:
+            tagged = tagged.unionByName(pre_rows, allowMissingColumns=True)
+        delta_rows = tagged.drop(tag)
+        files, new_stats, new_blooms, new_parts = _write_data_files(
+            tagged, root, token, stats_cols, bloom_cols,
+            transforms=_rewrite_transforms(state, live, delta_rows)
             if live
             else None,
+            tag=tag,
+        )
+        added = files.get("live", [])
+        cdf_pre, cdf_post, cdf_ins = (
+            files.get("pre", []), files.get("post", []), files.get("ins", []),
         )
         # constraints gate on the WRITTEN delta files, before the
-        # vectors/sidecars land and the manifest publishes (ADVICE r10:
+        # vectors land and the manifest publishes (ADVICE r10:
         # validating the un-materialized `changes` plan evaluated it
         # twice — the same hole log_append closed); the delta files ARE
         # the change rows, so the re-read is change-set-sized
@@ -4135,32 +4047,6 @@ def log_merge_mor(
                 if by_file
                 else ({}, [])
             )
-        if matched_pre is not None and dv_set:
-            # matched_pre reads the physical files directly — already
-            # in physical column names, like changes_p
-            cdf_pre = _write_cdf_sidecar(
-                matched_pre.drop("_fpn", "_ri"), root, token, "pre"
-            )
-            matched_keys = matched_pre.select(*phys_keys).distinct()
-            cdf_post = _write_cdf_sidecar(
-                changes_p.join(
-                    F.broadcast(matched_keys), phys_keys, "left_semi"
-                ),
-                root,
-                token,
-                "post",
-            )
-            cdf_ins = _write_cdf_sidecar(
-                changes_p.join(
-                    F.broadcast(matched_keys), phys_keys, "left_anti"
-                ),
-                root,
-                token,
-                "ins",
-            )
-        else:
-            cdf_pre, cdf_post = [], []
-            cdf_ins = _write_cdf_sidecar(changes_p, root, token, "ins")
         manifest = {
             "version": base + 1,
             "action": "merge_mor",
@@ -4181,8 +4067,7 @@ def log_merge_mor(
                 else {}
             ),
             "schemas": sorted(
-                set(state["schemas"])
-                | {changes_write.schema.simpleString()}
+                set(state["schemas"]) | {delta_rows.schema.simpleString()}
             ),
             "ts": time.time(),
         }
@@ -4209,8 +4094,7 @@ def _log_replace_content(
     colmap = _extend_colmap(state["colmap"], df.columns, state)
     df_p = _to_physical_loose(df, colmap)
     token = uuid.uuid4().hex[:12]
-    stats_cols = sorted({c for st in state["stats"].values() for c in st})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
+    stats_cols, bloom_cols = _table_meta_cols(state)
     added, new_stats, new_blooms, new_parts = _write_data_files(
         df_p, root, token, stats_cols, bloom_cols,
         transforms=_rewrite_transforms(state, state["live"], df_p)
@@ -6104,8 +5988,9 @@ def log_convert_in_place(
     the log (atomic commits, time travel, CoW/MoR deletes, vacuum).
 
     Stats/bloom columns are computed by ONE distributed aggregation over
-    the linked files, exactly like a fresh append — on a 100 TB import
-    that scan is the whole cost; the data itself never moves. The table
+    the linked files (not from their footers: a foreign writer's footer
+    statistics may be truncated or absent) — on a 100 TB import that
+    scan is the whole cost; the data itself never moves. The table
     must not already exist at ``root``."""
     import glob as _glob
 
@@ -6125,53 +6010,14 @@ def log_convert_in_place(
         name = f"part-{i:05d}-{os.path.basename(src)}"
         os.link(src, os.path.join(out_dir, name))
         rel.append(os.path.join(_DATA_DIR, token, name))
-    stats: dict = {}
-    blooms: dict = {}
-    if stats_cols or bloom_cols:
-        # reuse the append-path stats job over the linked files
-        from pyspark.sql import functions as F  # noqa: F401
-
-        back = spark.read.parquet(out_dir)
-        types = {f.name: f.dataType.typeName() for f in back.schema.fields}
-        keep = [c for c in (stats_cols or []) if types.get(c) in _STATS_TYPES]
-        keep_b = [
-            c for c in (bloom_cols or []) if types.get(c) in _BLOOM_TYPES
-        ]
-        if keep or keep_b:
-            from pyspark.sql import functions as F
-
-            aggs = []
-            for c in keep:
-                aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-            for c in keep_b:
-                arr = _bloom_position_cols(c, types[c] == "string")
-                aggs.append(
-                    F.array_distinct(F.flatten(F.collect_list(arr))).alias(
-                        f"bl_{c}"
-                    )
-                )
-            idx = _rel_index(root, rel)
-            for r in (
-                back.groupBy(F.input_file_name().alias("_f"))
-                .agg(*aggs)
-                .collect()
-            ):
-                key = os.path.normpath(
-                    os.path.abspath(_uri_to_path(r["_f"]))
-                )
-                tail = idx.get(key) or next(
-                    (p for p in rel if key.endswith(p)), None
-                )
-                if tail is None:
-                    continue
-                if keep:
-                    stats[tail] = {
-                        c: [_json_val(r[f"mn_{c}"]), _json_val(r[f"mx_{c}"])]
-                        for c in keep
-                    }
-                if keep_b:
-                    blooms[tail] = {c: sorted(r[f"bl_{c}"]) for c in keep_b}
-    schema = spark.read.parquet(out_dir).schema.simpleString()
+    back = spark.read.parquet(out_dir)
+    types = {f.name: f.dataType.typeName() for f in back.schema.fields}
+    stats, blooms = _aggregate_file_meta(
+        spark, root, rel, types,
+        [c for c in stats_cols or [] if types.get(c) in _STATS_TYPES],
+        [c for c in bloom_cols or [] if types.get(c) in _BLOOM_TYPES],
+    )
+    schema = back.schema.simpleString()
     manifest = {
         "version": 0,
         "action": "convert",
@@ -6328,8 +6174,7 @@ def log_compact_small_files(
         return _commit(root, base + 1, manifest)
     merge_sch = len(state["schemas"]) > 1
     colmap = state["colmap"]
-    stats_cols = sorted({c for s in state["stats"].values() for c in s})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
+    stats_cols, bloom_cols = _table_meta_cols(state)
     pz = None
     if zorder_cols:
         pz = [(colmap or {}).get(c, c) for c in zorder_cols]
@@ -6550,8 +6395,7 @@ def log_reorg_purge(
             spark, root, survivors, base
         ).drop("_fpn", "_ri")
     token = uuid.uuid4().hex[:12]
-    stats_cols = sorted({c for s in state["stats"].values() for c in s})
-    bloom_cols = sorted({c for b in state["blooms"].values() for c in b})
+    stats_cols, bloom_cols = _table_meta_cols(state)
     added, new_stats, new_blooms, _np = _write_data_files(
         survivors, root, token, stats_cols, bloom_cols
     )

@@ -191,10 +191,16 @@ def test_mor_log_changes_second_delete_delta_only(spark, root):
 
 
 def _sidecar_files(root):
+    """Change-image files on disk: the parquet files under a commit's
+    non-live role directory."""
     out = set()
     data_root = os.path.join(root, "data")
     for dirpath, _dirs, files in os.walk(data_root):
-        if os.path.basename(dirpath).startswith("_cdf_"):
+        roles = [
+            c for c in os.path.relpath(dirpath, data_root).split(os.sep)
+            if c.startswith(f"{TL._COW_TAG}=")
+        ]
+        if roles and roles[0] != f"{TL._COW_TAG}=live":
             for f in files:
                 if f.endswith(".parquet"):
                     out.add(

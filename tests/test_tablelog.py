@@ -199,6 +199,30 @@ def test_merge_upsert_file_level_cow(spark, root):
     # stats carried + refreshed: every live file still has stats
     snap_v = TL._snapshot(root, v)
     assert set(snap_v["stats"]) == set(snap_v["live"])
+    # a decimal(12,2) table key merged with bigint change keys: the
+    # matched-key frame carries the table's key type, not the change's
+    root2 = tempfile.mkdtemp(prefix="tablelog_test_dec_")
+    try:
+        TL.log_append(spark, root2, o.filter("o_orderkey < 100").select(
+            F.col("o_orderkey").cast("decimal(12,2)").alias("k"),
+            "o_orderstatus",
+        ).coalesce(1))
+        changes = spark.createDataFrame(
+            [(1, "Z"), (2, "Z"), (10**9, "N")],
+            "k BIGINT, o_orderstatus STRING",
+        )
+        TL.log_merge(spark, root2, changes, "k")
+        want = {
+            r[0]: ("Z" if r[0] in (1, 2) else r[1])
+            for r in o.filter("o_orderkey < 100").collect()
+        }
+        want[10**9] = "N"
+        got = TL.log_read(spark, root2).collect()
+        assert sorted((int(r["k"]), r["o_orderstatus"]) for r in got) == (
+            sorted(want.items())
+        )
+    finally:
+        shutil.rmtree(root2, ignore_errors=True)
 
 
 def test_schema_recorded_in_manifest(spark, root):

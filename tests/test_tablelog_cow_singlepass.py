@@ -1,14 +1,17 @@
-"""Single-pass tagged copy-on-write commits (r13 optimization): the
-UPDATE/DELETE fast path writes survivors AND the commit-time change
-images in ONE Spark job (`_write_cow_tagged`), partitioned by a tag
-column and promoted to the layout the readers/manifests always used.
-These tests pin the edges the optimization's semantic-compat argument
-rests on — a drifted fast path would silently diverge from the
-multi-write form, not crash."""
+"""One Spark write per table-log commit: every CoW/MoR writer
+(DELETE, UPDATE, MERGE and their merge-on-read forms) writes its live
+files AND the commit-time change images in ONE job, partitioned by a
+role column ('live' | 'pre' | 'post' | 'ins'), and the files stay
+where Spark wrote them — the manifest lists every path. Min/max stats
+come from the written files' parquet footers. These tests pin the
+edges that design rests on: exact change images, NULL-predicate
+semantics, one write-job UUID per commit on tables with every former
+fallback trigger, and footer stats equal to the aggregate form."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -33,33 +36,50 @@ def _orders(spark):
     )
 
 
+def _one_write(spark, root, version, cols):
+    """Manifest invariants of a single-write commit: every file it
+    lists exists; it lists every parquet file under its token dir; all
+    its data files (live files and change images, not the deletion
+    vectors) carry ONE Spark write-job UUID; the read surfaces exactly
+    ``cols`` (no role column)."""
+    m = TL._read_manifest(root, version)
+    listed = set(m["add"])
+    assert m["live_add"] or m.get("cdf_pre") or m.get("cdf_ins")
+    for f in listed:
+        assert os.path.exists(os.path.join(root, f)), f
+    tokens = {f.split(os.sep)[1] for f in listed}
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), root)
+        for t in tokens
+        for d, _dirs, fs in os.walk(os.path.join(root, "data", t))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == listed
+    vectors = set((m.get("dv_set") or {}).values())
+    jobs = {
+        re.match(r"part-\d+-([0-9a-f-]{36})", os.path.basename(f)).group(1)
+        for f in listed - vectors
+    }
+    assert len(jobs) == 1, jobs
+    assert sorted(TL.log_read(spark, root).columns) == sorted(cols)
+    return m
+
+
 def test_tagged_layout_matches_readers_and_manifest(spark, root):
-    """The promoted layout is indistinguishable from the multi-write
-    form: live files directly under data/<token>/, change images under
-    _cdf_pre/_cdf_post, manifest lists pointing at exactly those paths,
-    and no tag directory (or tag column) surviving anywhere."""
+    """The single write's layout is the manifest's business alone:
+    live files and change images come from one job, every listed file
+    exists, nothing unlisted is left in the commit's token dir, and no
+    role column reaches a reader."""
     o = _orders(spark)
     TL.log_append(spark, root, o)
     TL.log_update_where(
         spark, root, "o_orderstatus = 'O'", {"o_totalprice": "o_totalprice + 5"}
     )
-    m = TL._read_manifest(root, 1)
+    m = _one_write(spark, root, 1, o.columns)
     assert m["live_add"] and m["cdf_pre"] and m["cdf_post"]
-    for f in m["live_add"]:
-        # directly under the token dir: data/<token>/<file>
-        assert os.path.basename(os.path.dirname(os.path.dirname(f))) == "data"
-        assert os.path.exists(os.path.join(root, f))
-    for f in m["cdf_pre"]:
-        assert os.path.dirname(f).endswith("_cdf_pre")
-        assert os.path.exists(os.path.join(root, f))
-    for f in m["cdf_post"]:
-        assert os.path.dirname(f).endswith("_cdf_post")
-    # no leftover partitionBy tag dirs, and no tag column in any file
-    for dirpath, dirs, _files in os.walk(os.path.join(root, "data")):
-        assert not any(TL._COW_TAG in d for d in dirs), (dirpath, dirs)
     snap = TL.log_read(spark, root)
-    assert TL._COW_TAG not in snap.columns
-    # content equals the projection the multi-write form produced
+    # content equals the UPDATE's projection
     expected = o.select(
         "o_orderkey",
         "o_orderstatus",
@@ -72,9 +92,8 @@ def test_tagged_layout_matches_readers_and_manifest(spark, root):
 
 
 def test_update_cdf_images_exact(spark, root):
-    """The single-pass pre/post sidecars carry EXACTLY the matched rows'
-    old and new images (the change-feed contract the 3-write form
-    served)."""
+    """The pre/post change images carry EXACTLY the matched rows' old
+    and new images (the change-feed contract)."""
     o = _orders(spark)
     TL.log_append(spark, root, o)
     TL.log_update_where(
@@ -95,9 +114,9 @@ def test_update_cdf_images_exact(spark, root):
 
 
 def test_delete_all_rows_leaves_readable_empty_table(spark, root):
-    """A DELETE matching every row goes through the fast path with an
-    empty 'live' tag — no survivor files, empty-but-readable snapshot,
-    pre-image sidecar carrying the full table."""
+    """A DELETE matching every row writes no 'live' role — no survivor
+    files, empty-but-readable snapshot, pre-image carrying the full
+    table."""
     o = _orders(spark)
     TL.log_append(spark, root, o)
     TL.log_delete_where(spark, root, "o_orderkey IS NOT NULL")
@@ -113,11 +132,10 @@ def test_delete_all_rows_leaves_readable_empty_table(spark, root):
 
 
 def test_null_predicate_rows_keep_multiwrite_semantics(spark, root):
-    """Rows where the DELETE predicate evaluates NULL fell out of BOTH
-    filters in the multi-write form (survivors used `~pred`, the
-    sidecar used `pred`; NULL fails both) — the fast path's explode of
-    a NULL array must reproduce that exactly, and UPDATE's NULL-match
-    rows must pass through unmodified with no change image."""
+    """A row whose DELETE predicate is NULL satisfies neither `pred`
+    nor `~pred`: the single write gives it no role, so it leaves the
+    survivors AND the pre-image. UPDATE's NULL-match rows pass through
+    unmodified with no change image."""
     o = _orders(spark).limit(100)
     with_null = o.withColumn(
         "flag",
@@ -158,18 +176,17 @@ def test_null_predicate_rows_keep_multiwrite_semantics(spark, root):
         shutil.rmtree(root2, ignore_errors=True)
 
 
-def test_fast_path_gates_fall_back_to_multiwrite(spark, root):
-    """Stats-carrying tables take the multi-write path (stats must be
-    recomputed for survivor files) — and still produce correct content
-    plus refreshed stats for the rewritten files."""
+def test_stats_table_update_refreshes_footer_stats(spark, root):
+    """A stats-carrying table takes the same single write: the
+    rewritten files re-carry min/max stats (read from their footers)
+    and the content is exact."""
     o = _orders(spark)
     TL.log_append(spark, root, o.coalesce(2), stats_cols=["o_orderkey"])
     TL.log_update_where(
         spark, root, "o_orderkey % 2 = 0", {"o_totalprice": "o_totalprice + 1"}
     )
-    m = TL._read_manifest(root, 1)
-    # survivors re-carry min/max stats (the multi-write path's job)
-    assert m["stats_add"]
+    m = _one_write(spark, root, 1, o.columns)
+    assert set(m["stats_add"]) == set(m["live_add"])
     assert all("o_orderkey" in s for s in m["stats_add"].values())
     expected = o.select(
         "o_orderkey",
@@ -184,16 +201,14 @@ def test_fast_path_gates_fall_back_to_multiwrite(spark, root):
 
 
 # ---------------------------------------------------------------------------
-# r14: MERGE single-pass tagged commit + DV-aware probe, MoR update
-# delta+preimage single write
+# MERGE (DV-aware probe) and MoR UPDATE
 # ---------------------------------------------------------------------------
 
 
 def test_merge_singlepass_images_and_content_exact(spark, root):
-    """The single-pass MERGE commit writes survivors + pre/post/ins from
-    one tagged job; images must be EXACTLY the multi-write form's: pre =
-    matched old rows, post = matched change rows, ins = pure inserts,
-    final content = upsert semantics, no tag dirs/columns anywhere."""
+    """The MERGE commit writes survivors + pre/post/ins from one job;
+    images are EXACT: pre = matched old rows, post = matched change
+    rows, ins = pure inserts, final content = upsert semantics."""
     o = _orders(spark).limit(200)
     TL.log_append(spark, root, o)
     changes = o.filter("o_orderkey % 5 = 0").withColumn(
@@ -207,7 +222,7 @@ def test_merge_singlepass_images_and_content_exact(spark, root):
     )
     n_upd = o.filter("o_orderkey % 5 = 0").count()
     TL.log_merge(spark, root, changes, "o_orderkey")
-    m = TL._read_manifest(root, 1)
+    m = _one_write(spark, root, 1, o.columns)
     assert m["cdf_pre"] and m["cdf_post"] and m["cdf_ins"]
     pre = spark.read.parquet(*[os.path.join(root, f) for f in m["cdf_pre"]])
     post = spark.read.parquet(*[os.path.join(root, f) for f in m["cdf_post"]])
@@ -220,11 +235,8 @@ def test_merge_singlepass_images_and_content_exact(spark, root):
     # final content = upsert(o, changes)
     expected = o.filter("o_orderkey % 5 <> 0").unionByName(changes)
     snap = TL.log_read(spark, root)
-    assert TL._COW_TAG not in snap.columns
     assert snap.exceptAll(expected).count() == 0
     assert expected.exceptAll(snap).count() == 0
-    for dirpath, dirs, _files in os.walk(os.path.join(root, "data")):
-        assert not any(TL._COW_TAG in d for d in dirs), (dirpath, dirs)
 
 
 def test_merge_dv_dead_key_is_an_insert(spark, root):
@@ -251,16 +263,15 @@ def test_merge_dv_dead_key_is_an_insert(spark, root):
 
 
 def test_mor_update_singlepass_delta_and_preimage(spark, root):
-    """MoR UPDATE on an unpartitioned/stat-less table writes the delta
-    file (post-images, doubling as cdf_post) and the pre-image sidecar
-    in ONE tagged job — images and final content identical to the
-    2-write form; vectors still mark the old positions dead."""
+    """MoR UPDATE writes the delta file (post-images, doubling as
+    cdf_post) and the pre-image change file in ONE job — exact images
+    and content; vectors still mark the old positions dead."""
     o = _orders(spark).limit(300)
     TL.log_append(spark, root, o)
     TL.log_update_where_mor(
         spark, root, "o_orderkey % 4 = 0", {"o_totalprice": "o_totalprice * 2"}
     )
-    m = TL._read_manifest(root, 1)
+    m = _one_write(spark, root, 1, o.columns)
     n_upd = o.filter("o_orderkey % 4 = 0").count()
     assert m["dv_set"] and m["live_add"] and m["cdf_pre"]
     assert m["cdf_post"] == m["live_add"]  # delta files ARE post-images
@@ -280,26 +291,119 @@ def test_mor_update_singlepass_delta_and_preimage(spark, root):
     snap = TL.log_read(spark, root)
     assert snap.exceptAll(expected).count() == 0
     assert expected.exceptAll(snap).count() == 0
-    for dirpath, dirs, _files in os.walk(os.path.join(root, "data")):
-        assert not any(TL._COW_TAG in d for d in dirs), (dirpath, dirs)
 
 
-def test_cow_tag_named_column_falls_back(spark, root):
-    """A physical column literally named `_tl_cdf_tag` must push every
-    CoW writer onto the multi-write path and still commit correctly
-    (ADVICE r13: the tagged struct would carry duplicate field names)."""
-    o = _orders(spark).limit(50).withColumn(TL._COW_TAG, F.lit("x"))
-    TL.log_append(spark, root, o)
-    TL.log_update_where(
+def test_former_fallback_triggers_take_one_write(spark, root):
+    """Stats and bloom columns, a hidden-partition spec, row lineage and
+    a user column literally named `_tl_cdf_tag` — each once pushed the
+    writers onto a multi-write path. Every CoW and MoR writer now
+    commits with ONE write job, keeps the user column, records
+    metadata for its live files, and matches a dict model."""
+    o = _orders(spark).filter("o_orderkey < 200").withColumn(
+        TL._COW_TAG, F.lit("x")
+    )
+    cols = o.columns
+    TL.log_append(
+        spark, root, o, stats_cols=["o_orderkey", "o_totalprice"],
+        bloom_cols=["o_orderkey"], partition_by=["bucket(2, o_orderkey)"],
+    )
+    TL.log_enable_row_lineage(root)
+    model = {r[0]: tuple(r) for r in o.collect()}
+
+    def rows(spec):
+        return spark.createDataFrame(
+            list(spec), "o_orderkey bigint, o_orderstatus string, "
+            f"o_totalprice double, {TL._COW_TAG} string",
+        )
+
+    def check(v):
+        m = _one_write(spark, root, v, cols)
+        assert set(m["stats_add"]) == set(m["blooms_add"]) == set(
+            m["parts_add"]
+        ) == set(m["live_add"])
+
+    v = TL.log_update_where(
         spark, root, "o_orderkey % 2 = 0", {"o_totalprice": "o_totalprice + 1"}
     )
-    TL.log_merge(
-        spark,
-        root,
-        o.limit(5).withColumn("o_totalprice", F.lit(0.0)),
-        "o_orderkey",
+    for k, (_, st, pr, t) in list(model.items()):
+        if k % 2 == 0:
+            model[k] = (k, st, pr + 1, t)
+    check(v)
+    merge = [(k, "Z", 0.0, "x") for k in model if k % 7 == 0]
+    merge += [(10_000_000 + k, "N", 1.0, "x") for k in (1, 2)]
+    v = TL.log_merge(spark, root, rows(merge), "o_orderkey")
+    model.update({r[0]: r for r in merge})
+    check(v)
+    v = TL.log_delete_where(spark, root, "o_orderkey % 3 = 0")
+    model = {k: r for k, r in model.items() if k % 3}
+    check(v)
+    v = TL.log_update_where_mor(
+        spark, root, "o_orderkey % 5 = 1", {"o_orderstatus": "'M'"}
     )
-    TL.log_delete_where(spark, root, "o_orderkey % 3 = 0")
-    snap = TL.log_read(spark, root)
-    assert TL._COW_TAG in snap.columns  # the USER column survives
-    assert snap.count() > 0
+    for k, (_, st, pr, t) in list(model.items()):
+        if k % 5 == 1:
+            model[k] = (k, "M", pr, t)
+    check(v)
+    merge = [(k, "Q", 2.0, "x") for k in model if k % 4 == 1]
+    merge += [(20_000_000, "N", 2.0, "x")]
+    v = TL.log_merge_mor(spark, root, rows(merge), "o_orderkey")
+    model.update({r[0]: r for r in merge})
+    check(v)
+    got = sorted(tuple(r) for r in TL.log_read(spark, root).collect())
+    assert got == sorted(model.values())
+
+
+def test_footer_stats_equal_the_aggregate(spark, root):
+    """Footer min/max over every stats type — INT32/INT64/FLBA-backed
+    decimals, NaN in a late row group, -0.0, an all-null column, a
+    string past the writer's 4 KB statistics cap, several row groups
+    per file — equal the aggregate, or are absent (the file then never
+    prunes)."""
+    import pyarrow.parquet as pq
+
+    i = F.col("id")
+    df = spark.range(0, 600).select(
+        (i * 7 - 2000).alias("l"),
+        (i * 13 - 3000).cast("int").alias("n"),
+        (i % 300 - 150).cast("short").alias("s"),
+        (i % 200 - 100).cast("byte").alias("b"),
+        F.when(i == 550, F.lit(float("nan")))
+        .otherwise(i * 0.5 - 100.0)
+        .alias("d"),
+        F.when(i % 2 == 0, F.lit(-0.0)).otherwise(F.lit(0.0)).alias("z"),
+        (i * 0.25 - 10).cast("float").alias("f"),
+        F.concat(F.lit("k"), F.lpad(i.cast("string"), 4, "0")).alias("str"),
+        F.date_add(F.lit("2020-01-01").cast("date"), i.cast("int")).alias(
+            "dt"
+        ),
+        (i * 1.25 - 50).cast("decimal(9,2)").alias("d9"),
+        (i * 1.25 - 50).cast("decimal(18,4)").alias("d18"),
+        (i * 1.25 - 50).cast("decimal(30,4)").alias("d30"),
+        F.lit(None).cast("int").alias("nul"),
+        F.when(i == 300, F.repeat(F.lit("x"), 5000))
+        .otherwise(i.cast("string"))
+        .alias("big"),
+    )
+    cols = df.columns
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        files, stats, _b, _p = TL._write_data_files(
+            df.coalesce(1), root, "stats", stats_cols=cols
+        )
+    finally:
+        spark.conf.unset("parquet.block.size")
+    assert len(files) == 1
+    path = os.path.join(root, files[0])
+    assert pq.ParquetFile(path).metadata.num_row_groups > 1
+    got = stats[files[0]]
+    # the reference: the aggregate form footer stats replaced
+    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    want = TL._aggregate_file_meta(spark, root, files, types, cols, [])[0][
+        files[0]
+    ]
+    for c, v in got.items():
+        for a, b in zip(v, want[c]):
+            assert a == b or (a != a and b != b), (c, v, want[c])
+    # only the over-cap string goes without stats
+    assert set(got) == set(cols) - {"big"}
+    assert got["nul"] == [None, None]

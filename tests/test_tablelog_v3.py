@@ -925,6 +925,16 @@ def test_describe_detail_and_vacuum_dry_run(spark, root):
     # the real vacuum then deletes exactly the dry run's list
     assert TL.log_vacuum(root) == would
     assert not os.path.exists(orphan)
+    # a CoW delete over the partitioned files, then a trimming vacuum:
+    # every directory left under data/ holds a file the log references
+    v = TL.log_delete_where(spark, root, "o_orderkey % 4 = 0")
+    TL.log_vacuum(root, retain_versions=1)
+    snap, m = TL._snapshot(root), TL._read_manifest(root, v)
+    ref = {*snap["live"], *snap["dv"].values(), *m["cdf_pre"]}
+    for dirpath, dirs, _files in os.walk(os.path.join(root, TL._DATA_DIR)):
+        for d in dirs:
+            rel = os.path.relpath(os.path.join(dirpath, d), root) + os.sep
+            assert any(f.startswith(rel) for f in ref), rel
 
 
 def test_update_cdf_sidecars_exact_labels(spark, root):
@@ -1059,6 +1069,46 @@ def test_merge_cdf_sidecars_exact_labels(spark, root):
         r[0] for r in v2.select("_change_type").distinct().collect()
     } == {"insert"}
     assert v2.count() == 3
+    # type drift: an int change key merged into the bigint table key —
+    # the feed keeps the table's types and exact labeled images
+    drift = (
+        o.filter("o_orderkey % 20 = 0")
+        .withColumn("o_totalprice", F.lit(2.0))
+        .unionByName(
+            o.limit(3).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 30_000_000
+            )
+        )
+        .withColumn("o_orderkey", F.col("o_orderkey").cast("int"))
+    )
+    TL.log_merge(spark, root, drift, "o_orderkey")  # v3
+    v3 = _cdf_batch(spark, root, startingVersion="3")
+    assert dict(v3.dtypes)["o_orderkey"] == "bigint"
+    n_drift = o.filter("o_orderkey % 20 = 0").count()
+    assert {
+        r["_change_type"]: r["n"]
+        for r in v3.groupBy("_change_type")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    } == {
+        "update_preimage": n_drift,
+        "update_postimage": n_drift,
+        "insert": 3,
+    }
+    assert _rows(
+        v3.filter("_change_type <> 'update_preimage'").select(*COLS)
+    ) == _rows(drift)
+    assert _rows(
+        v3.filter("_change_type = 'update_preimage'").select(*COLS)
+    ) == _rows(
+        o.filter("o_orderkey % 20 = 0").withColumn("o_totalprice", F.lit(1.0))
+    )
+    add3, rem3 = TL.log_changes(spark, root, 3)
+    assert _rows(add3.select(*COLS)) == _rows(drift)
+    assert rem3.count() == n_drift
+    assert _rows(_fold(_cdf_batch(spark, root))) == _rows(
+        TL.log_read(spark, root).select(*COLS)
+    )
 
 
 def test_update_cdf_sidecars_under_column_mapping(spark, root):
