@@ -34,9 +34,9 @@ Design choices, and where they sit on the production spectrum:
   resolved state is the same metadata the read path must hold to name
   the scan's files); at extreme file counts production writes them as
   a distributed job over (old checkpoint ⊎ delta) through the engine
-  itself. Legacy full-snapshot manifests (each carrying the complete
-  `live` list — the pre-delta format of this module) are still
-  resolved: they act as replay bases exactly like checkpoints.
+  itself. The full-snapshot manifests that RESTORE and a clone's v0
+  write (each carrying the complete `live` list) act as replay bases
+  exactly like checkpoints.
 * **Atomic exclusive publish via `os.link`** (hard link fails with
   EEXIST if the target version exists): put-if-absent on the manifest
   name IS the whole commit coordinator. This is exactly Delta's
@@ -299,12 +299,8 @@ def _empty_state() -> dict:
         "colmap": None,
         # streaming-sink idempotence ledger: query key -> max committed
         # micro-batch id (the Delta txn appId/version shape). Folded
-        # through checkpoints so the replay check is O(interval);
-        # `stream_txn_complete` is False when resolution passed through
-        # a pre-ledger checkpoint or full manifest, in which case the
-        # sink falls back to the full reverse walk (legacy tables only).
+        # through checkpoints so the replay check is O(interval)
         "stream_txn": {},
-        "stream_txn_complete": True,
         # CHECK constraints: name -> boolean SQL expression over logical
         # columns, enforced on every write path (Delta semantics: a row
         # violates when the expression evaluates to FALSE; NULL passes)
@@ -315,7 +311,8 @@ def _empty_state() -> dict:
         # ROW-ID accounting (Delta's AddFile.baseRowId shape): per-LIVE-
         # file base ids + the next-free watermark, recorded at commit
         # time so row tracking needs no history replay and survives
-        # vacuum trims; None watermark = legacy prefix (replay fallback)
+        # vacuum trims; None watermark = no table yet (every v0 records
+        # one)
         "rowid_bases": {},
         "rowid_watermark": None,
         # TYPE WIDENING (r13, Delta 4.0 shape): physical column ->
@@ -328,34 +325,24 @@ def _empty_state() -> dict:
 
 
 def _state_from_full(root: str, m: dict) -> dict:
-    """Resolved state from a FULL-SNAPSHOT manifest (a restore commit,
-    or the legacy pre-delta format where every commit carried `live`)."""
-    schemas = m.get("schemas")
-    if schemas is None:
-        # legacy manifests recorded only their own writer schema; the
-        # cumulative set is the union over the prefix (bounded by the
-        # log length; new manifests carry the set directly)
-        found = set()
-        for v in _versions(root):
-            if v > m["version"]:
-                break
-            try:
-                s = _read_manifest(root, v).get("schema")
-            except FileNotFoundError:  # trimmed by vacuum
-                continue
-            if s is not None:
-                found.add(s)
-        schemas = sorted(found)
+    """Resolved state from a FULL-SNAPSHOT manifest (a restore commit or
+    a clone's v0). Both record the cumulative schema set and the sink
+    ledger; a full manifest without them is refused, not guessed at."""
+    missing = [k for k in ("schemas", "stream_txn") if k not in m]
+    if missing:
+        raise ValueError(
+            f"tablelog at {root}: full manifest v{m['version']} lacks "
+            f"{', '.join(missing)}"
+        )
     return {
         "live": list(m["live"]),
         "dv": dict(m.get("dv", {})),
         "stats": dict(m.get("stats", {})),
         "blooms": dict(m.get("blooms", {})),
         "parts": dict(m.get("parts", {})),
-        "schemas": list(schemas),
+        "schemas": list(m["schemas"]),
         "colmap": m.get("colmap"),
-        "stream_txn": dict(m.get("stream_txn", {})),
-        "stream_txn_complete": "stream_txn" in m,
+        "stream_txn": dict(m["stream_txn"]),
         "constraints": dict(m.get("constraints", {})),
         "props": dict(m.get("props", {})),
         "rowid_bases": dict(m.get("rowid_bases", {})),
@@ -587,27 +574,14 @@ def _read_checkpoint(root: str, version: int) -> dict | None:
         stats: dict[str, dict] = {}
         blooms: dict[str, dict] = {}
         parts: dict[str, dict] = {}
-        # checkpoints written before hidden partitioning lack the
-        # parts column — resolve to no partition metadata (safe-only:
-        # those files simply never partition-prune)
-        pj_col = (
-            t["parts"].to_pylist()
-            if "parts" in t.column_names
-            else [None] * t.num_rows
-        )
-        rb_col = (
-            t["rowid_base"].to_pylist()
-            if "rowid_base" in t.column_names
-            else [None] * t.num_rows
-        )
         rowid_bases: dict[str, int] = {}
         for path, dvp, sj, bj, pj, rb in zip(
             t["path"].to_pylist(),
             t["dv"].to_pylist(),
             t["stats"].to_pylist(),
             t["blooms"].to_pylist(),
-            pj_col,
-            rb_col,
+            t["parts"].to_pylist(),
+            t["rowid_base"].to_pylist(),
         ):
             live.append(path)
             if dvp:
@@ -628,16 +602,12 @@ def _read_checkpoint(root: str, version: int) -> dict | None:
             "parts": parts,
             "schemas": meta.get("schemas", []),
             "colmap": meta.get("colmap"),
-            "stream_txn": dict(meta.get("stream_txn", {})),
+            "stream_txn": dict(meta["stream_txn"]),
             "constraints": dict(meta.get("constraints", {})),
             "props": dict(meta.get("props", {})),
             "rowid_bases": rowid_bases,
             "rowid_watermark": meta.get("rowid_watermark"),
             "widen": dict(meta.get("widen", {})),
-            # checkpoints written before the ledger existed can't prove
-            # the absence of earlier stream commits — mark incomplete so
-            # the sink's replay check falls back to the full walk
-            "stream_txn_complete": "stream_txn" in meta,
         }
     except Exception:
         return None
@@ -709,12 +679,8 @@ def log_checkpoint(root: str, version: int | None = None) -> int:
             "props": state["props"],
             "rowid_watermark": state["rowid_watermark"],
             "widen": state["widen"],
+            "stream_txn": state["stream_txn"],
         }
-        # only claim ledger completeness when the resolved state can:
-        # a checkpoint over a legacy (pre-ledger) prefix must keep the
-        # replay check on its full-walk fallback
-        if state["stream_txn_complete"]:
-            meta["stream_txn"] = state["stream_txn"]
         json.dump(meta, fh, sort_keys=True)
     try:
         os.rename(tmp, _ckpt_dir(root, version))
@@ -3227,32 +3193,18 @@ def log_restore(spark: SparkSession, root: str, version: int) -> int:
         "restored_from": version,
         "constraints": t["constraints"],
         # row-id accounting: the restored live set's bases are the
-        # target's (when that version has them all); the watermark is
-        # the CURRENT one — ranges handed out after the target stay
-        # reserved so post-restore commits never re-issue ids
-        **(
-            {
-                "rowid_bases": t["rowid_bases"],
-                "rowid_watermark": max(
-                    cur["rowid_watermark"] or 0,
-                    t["rowid_watermark"] or 0,
-                ),
-            }
-            if t["rowid_watermark"] is not None
-            and all(f in t["rowid_bases"] for f in t["live"])
-            and cur["rowid_watermark"] is not None
-            else {}
-        ),
+        # target's; the watermark is the CURRENT one — ranges handed
+        # out after the target stay reserved so post-restore commits
+        # never re-issue ids
+        "rowid_bases": t["rowid_bases"],
+        "rowid_watermark": cur["rowid_watermark"],
         # table PROPERTIES never roll back (like the idempotence
         # ledger): a restore rewinds content, but silently disabling
         # row lineage would break id stability for later rewrites
         "props": cur["props"],
+        "stream_txn": cur["stream_txn"],
         "ts": time.time(),
     }
-    if cur["stream_txn_complete"]:
-        manifest["stream_txn"] = cur["stream_txn"]
-    # else: omit the key — a legacy prefix can't prove ledger
-    # completeness, so downstream replay checks keep the full-walk path
     if t["colmap"] is not None:
         manifest["colmap"] = t["colmap"]
     return _commit(root, base + 1, manifest)
@@ -3346,22 +3298,6 @@ def log_clone(
             f if os.path.isabs(f) else os.path.normpath(os.path.join(root_src, f))
         )
 
-    # row-id carry (r12): a clone of a table WITH commit-time base
-    # accounting copies the recorded bases; a clone of a LEGACY source
-    # whose history is still fully replayable derives the source's
-    # bases ONCE and records them in the clone's v0 — so the clone
-    # serves the same ids as the source at clone time, and keeps
-    # serving them even after the source log trims (the clone itself
-    # never replays the source history again). A trimmed legacy source
-    # stays legacy: the clone refuses row-id reads like the source.
-    rowid_bases = state["rowid_bases"]
-    rowid_wm = state["rowid_watermark"]
-    if rowid_wm is None or any(f not in rowid_bases for f in state["live"]):
-        try:
-            rowid_bases, rowid_wm = _row_id_bases_replay(root_src, version)
-        except ValueError:
-            rowid_bases, rowid_wm = {}, None
-
     manifest = {
         "version": 0,
         "action": "clone",
@@ -3376,17 +3312,12 @@ def log_clone(
         "stream_txn": {},  # a clone is a NEW table: fresh sink ledger
         "constraints": state["constraints"],
         "props": state["props"],
-        **(
-            {
-                "rowid_bases": {
-                    absf(f): b for f, b in rowid_bases.items()
-                },
-                "rowid_watermark": rowid_wm,
-            }
-            if rowid_wm is not None
-            and all(f in rowid_bases for f in state["live"])
-            else {}
-        ),
+        # row-id carry (r12): the clone serves the source's ids at clone
+        # time and keeps serving them after the source log trims
+        "rowid_bases": {
+            absf(f): b for f, b in state["rowid_bases"].items()
+        },
+        "rowid_watermark": state["rowid_watermark"],
         "cloned_from": {
             "root": os.path.abspath(root_src),
             "version": version
@@ -5272,7 +5203,7 @@ def _log_changes_files(
         # — the same economics the streaming CDF reader already has
         # (r10; for MoR commits this is also the only correct shape:
         # their generic remove list is empty). File granularity remains
-        # the fallback for legacy manifests, appends, and RESTORE.
+        # the shape for appends and RESTORE.
         post = list(m.get("cdf_post") or []) + list(m.get("cdf_ins") or [])
         add = (
             _rdr().parquet(*[os.path.join(root, f) for f in post])
@@ -5289,19 +5220,12 @@ def _log_changes_files(
     if m["action"] == "delete_mor":
         from pyspark.sql import functions as F
 
+        changed = m.get("dv_set", {})
+        if not changed:
+            return None, None
         prev_dv = (
             _snapshot(root, version - 1)["dv"] if version > 0 else {}
         )
-        if "dv_set" in m:
-            changed = m["dv_set"]
-        else:  # legacy full-dv manifests: diff against the previous map
-            changed = {
-                f: d
-                for f, d in m.get("dv", {}).items()
-                if prev_dv.get(f) != d
-            }
-        if not changed:
-            return None, None
         # (dv abs path -> data file abs path) lookups, KB-sized
         def _lookup(pairs):
             return spark.createDataFrame(
@@ -6097,7 +6021,7 @@ def log_compact_small_files(
     SELECTION is BYTE-based by default (VERDICT r12 #3 — Delta's
     heuristic): a file is small when its on-disk size is under
     ``small_max_bytes`` (default: half the target file size). The
-    legacy ROW form stays as the fallback knob: pass
+    row-count form stays as an alternative knob: pass
     ``small_max_rows`` (or set TBLPROPERTIES
     'optimize.small_max_rows') and footer row counts gate instead.
 
@@ -6957,70 +6881,32 @@ ORDER BY o_orderkey
 """
 
 
+def _require_rowid_accounting(root: str, state: dict) -> None:
+    """Refuse a state whose row-id accounting is incomplete: every
+    commit records a watermark and each added live file's base, so a
+    gap means the log was not written by this module."""
+    if state["rowid_watermark"] is None or any(
+        f not in state["rowid_bases"] for f in state["live"]
+    ):
+        raise ValueError(
+            f"tablelog at {root}: no row-id accounting recorded (missing "
+            "watermark or live-file base)"
+        )
+
+
 def _row_id_bases(root: str, version: int | None = None) -> dict[str, int]:
     """Per-file base row ids for the snapshot at ``version``.
 
-    FAST PATH (r11): commits record each added live file's base and the
-    table's next-free watermark in the manifest (Delta's
-    ``AddFile.baseRowId`` shape), so resolution is just the snapshot
-    state — O(1) beyond it, and it keeps working after VACUUM trims the
-    history. Dead files' ranges stay reserved because the watermark only
-    ever advances, so a rewritten file's materialized ids (drawn from a
-    dead predecessor's range) can never collide with a fresh file's
-    base+position ids.
-
-    LEGACY FALLBACK: tables whose prefix predates the accounting replay
-    the manifest history (each file based at FIRST appearance,
-    watermark += its footer row count) — that path still needs the full
-    log and raises on a trimmed history."""
+    Commits record each added live file's base and the table's
+    next-free watermark in the manifest (Delta's ``AddFile.baseRowId``
+    shape), so resolution is just the snapshot state — O(1) beyond it,
+    and it keeps working after VACUUM trims the history. Dead files'
+    ranges stay reserved because the watermark only ever advances, so a
+    rewritten file's materialized ids (drawn from a dead predecessor's
+    range) can never collide with a fresh file's base+position ids."""
     state = _snapshot(root, version)
-    bases = state["rowid_bases"]
-    if state["rowid_watermark"] is not None and all(
-        f in bases for f in state["live"]
-    ):
-        return dict(bases)
-    return _row_id_bases_replay(root, version)[0]
-
-
-def _row_id_bases_replay(
-    root: str, version: int | None = None
-) -> tuple[dict[str, int], int]:
-    """(bases, watermark) by ONE deterministic replay of the manifest
-    history — the legacy resolution for tables without commit-time
-    row-id accounting. Raises on a vacuum-trimmed history: replayed
-    bases are a property of the full log."""
-    vs = _versions(root)
-    if not vs:
-        raise ValueError(f"no table at {root}")
-    if vs[0] != 0:
-        raise ValueError(
-            "row tracking needs the full manifest history (bases are "
-            f"assigned by replay from v0, but the table at {root} is "
-            f"trimmed to v{vs[0]}); materialize _row_id before VACUUM "
-            "retention trims"
-        )
-    import pyarrow.parquet as pq
-
-    bases: dict[str, int] = {}
-    watermark = 0
-    target = _latest_version(root) if version is None else version
-    for v in vs:
-        if v > target:
-            break
-        m = _read_manifest(root, v)
-        files = m["live"] if "live" in m else m.get("live_add", m["add"])
-        for f in files:
-            if f in bases:
-                continue
-            try:
-                n = pq.ParquetFile(
-                    os.path.join(root, f)
-                ).metadata.num_rows
-            except OSError:
-                continue
-            bases[f] = watermark
-            watermark += n
-    return bases, watermark
+    _require_rowid_accounting(root, state)
+    return dict(state["rowid_bases"])
 
 
 def _rowid_fields(
@@ -7029,33 +6915,21 @@ def _rowid_fields(
     """Manifest fields recording row-id accounting for a commit that
     adds ``added_live`` data files: each new file based at the current
     watermark (footer row count, KB read), watermark advanced past it.
-    A legacy prefix (no recorded watermark, or live files without
-    recorded bases) is UPGRADED in place — this commit records the
-    complete live mapping derived by one replay; if the history is
-    already trimmed the table simply stays legacy (empty dict)."""
+    A state with no watermark and no live files is a new table, whose
+    accounting starts at zero. An unreadable footer raises, so the
+    commit never publishes without accounting (its written files stay
+    invisible orphans for ``log_vacuum``)."""
     import pyarrow.parquet as pq
 
-    bases = dict(state["rowid_bases"])
     wm = state["rowid_watermark"]
+    if wm is None and not state["live"]:
+        wm = 0
+    else:
+        _require_rowid_accounting(root, state)
     add: dict[str, int] = {}
-    if wm is None or any(f not in bases for f in state["live"]):
-        if not state["live"] and not _versions(root):
-            wm = 0  # brand-new table: accounting starts at zero
-        else:
-            try:
-                replay, wm = _row_id_bases_replay(root)
-            except ValueError:
-                return {}  # trimmed legacy history: no retroactive bases
-            add.update(
-                {f: replay[f] for f in state["live"] if f in replay}
-            )
     for f in added_live:
-        try:
-            n = pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        except OSError:
-            return {}
         add[f] = wm
-        wm += n
+        wm += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return {"rowid_bases_add": add, "rowid_watermark": wm}
 
 
@@ -7189,8 +7063,8 @@ def log_read_with_row_ids(
     """ROW TRACKING read surface (Delta's *base row ID* semantics): the
     snapshot with a stable, unique BIGINT ``_row_id`` per physical row
     — ``coalesce(materialized lineage id, file base + row position)``.
-    Bases come from :func:`_row_id_bases` (one manifest replay, KB
-    footer reads), so an id
+    Bases come from :func:`_row_id_bases` (the snapshot's recorded
+    accounting), so an id
 
       * never changes across appends, MoR deletes, MoR updates (the
         surviving rows stay at their positions; deletion vectors only
@@ -7208,13 +7082,11 @@ def log_read_with_row_ids(
     (decoded file path → base) joined to ``_metadata.row_index``.
     Bases are RECORDED AT COMMIT TIME (r11, Delta's AddFile.baseRowId
     shape), so resolution is O(snapshot) and ids survive VACUUM
-    retention trims; only a table whose legacy prefix predates the
-    accounting falls back to history replay (which raises on a trimmed
-    history — one commit upgrades such a table in place)."""
+    retention trims."""
     from pyspark.sql import functions as F
 
-    bases = _row_id_bases(root, version)
     state = _snapshot(root, version)
+    _require_rowid_accounting(root, state)
     if not state["live"]:
         # an emptied-but-existing version (VERDICT r10 #1): zero rows,
         # same logical columns, with the _row_id column in front
@@ -7238,9 +7110,11 @@ def log_read_with_row_ids(
         [
             # abspath like _rel_index (ADVICE r11): _fpn is absolute,
             # a relative root must not break the base join
-            (os.path.normpath(os.path.abspath(os.path.join(root, f))), b)
-            for f, b in bases.items()
-            if f in set(state["live"])
+            (
+                os.path.normpath(os.path.abspath(os.path.join(root, f))),
+                state["rowid_bases"][f],
+            )
+            for f in state["live"]
         ],
         "_fpn string, _rid_base long",
     )

@@ -809,6 +809,8 @@ def test_tablelog_model_based(spark, ops):
 
     from cdc_local_data_pipeline_docker_spark.sources import tablelog as TL
 
+    from .tablelog_checks import assert_commit_metadata
+
     root = tempfile.mkdtemp(prefix="tablelog_hyp_")
     try:
         model: dict[int, int] = {}
@@ -1038,7 +1040,10 @@ def test_tablelog_model_based(spark, ops):
         # final state and EVERY RETAINED historical version match the
         # model, including each version's logical column names and the
         # evolved/added column's NULL pattern; trimmed versions must
-        # fail cleanly, never serve stale data
+        # fail cleanly, never serve stale data. Every retained version
+        # also keeps its commit-time metadata, so no resolution needs a
+        # fallback for tables that lack it.
+        assert_commit_metadata(root)
         for v, (snap, vname, wsnap) in enumerate(snapshots):
             if v < trim_floor:
                 with pytest.raises(ValueError):

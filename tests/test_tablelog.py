@@ -89,7 +89,7 @@ def test_commit_conflict_and_append_rebase(spark, root):
     # then appending — the append must land at v2 with BOTH live sets
     live0 = TL._live_files(root, 0)
     TL._commit(root, 1, {"version": 1, "action": "append", "add": [],
-                         "remove": [], "live": live0, "ts": 0})
+                         "remove": [], "ts": 0})
     v = TL.log_append(spark, root, o.limit(5))
     assert v == 2
     assert set(live0) <= set(TL._live_files(root, 2))

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from cdc_local_data_pipeline_docker_spark.sources import tablelog as TL
 
+from .tablelog_checks import assert_commit_metadata
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -41,7 +43,8 @@ def _one_write(spark, root, version, cols):
     lists exists; it lists every parquet file under its token dir; all
     its data files (live files and change images, not the deletion
     vectors) carry ONE Spark write-job UUID; the read surfaces exactly
-    ``cols`` (no role column)."""
+    ``cols`` (no role column); and every retained version keeps its
+    commit-time metadata (:func:`assert_commit_metadata`)."""
     m = TL._read_manifest(root, version)
     listed = set(m["add"])
     assert m["live_add"] or m.get("cdf_pre") or m.get("cdf_ins")
@@ -63,6 +66,7 @@ def _one_write(spark, root, version, cols):
     }
     assert len(jobs) == 1, jobs
     assert sorted(TL.log_read(spark, root).columns) == sorted(cols)
+    assert_commit_metadata(root)
     return m
 
 

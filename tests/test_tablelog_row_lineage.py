@@ -204,8 +204,10 @@ def test_time_travel_across_lineage_commits(spark, root):
 def test_rowid_bases_recorded_at_commit_and_survive_trim(spark, root):
     """r11: commits record each added live file's base row id + the
     table watermark in the manifest (Delta's AddFile.baseRowId shape) —
-    resolution needs no history replay, agrees exactly with the legacy
-    replay, and row ids survive a VACUUM retention trim."""
+    resolution needs no history replay, agrees exactly with a replay of
+    the history, and row ids survive a VACUUM retention trim."""
+    import pyarrow.parquet as pq
+
     ids0 = _tbl(spark, root)
     TL.log_append(
         spark, root,
@@ -219,42 +221,23 @@ def test_rowid_bases_recorded_at_commit_and_survive_trim(spark, root):
     TL.log_update_where(spark, root, "k % 2 = 0", {"val": "val + 1"})
     TL.log_delete_where_mor(spark, root, "k = 7")
     rec = TL._row_id_bases(root)
-    rep, _wm = TL._row_id_bases_replay(root)
-    live = set(TL._snapshot(root)["live"])
-    assert all(rec[f] == rep[f] for f in live)
+    # oracle: bases are prefix sums of footer row counts, each file
+    # based at its first appearance in the history
+    rep, wm = {}, 0
+    for v in TL._versions(root):
+        m = TL._read_manifest(root, v)
+        for f in m.get("live_add", m["add"]):
+            if f not in rep:
+                rep[f] = wm
+                wm += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+    st = TL._snapshot(root)
+    assert rec == {f: rep[f] for f in st["live"]}
+    assert st["rowid_watermark"] == wm
     before = _ids(spark, root)
     TL.log_checkpoint(root)
     TL.log_vacuum(root, retain_versions=2)
     assert TL._versions(root)[0] > 0  # history actually trimmed
     assert _ids(spark, root) == before
-
-
-def test_legacy_table_upgrades_in_place(spark, root):
-    """A table whose manifests predate the accounting (simulated by
-    stripping the keys) resolves by replay; its NEXT commit records the
-    complete live mapping, preserving every id."""
-    import glob
-    import json
-
-    _tbl(spark, root)
-    TL.log_append(
-        spark, root, spark.createDataFrame([(50, 5)], "k LONG, val LONG")
-    )
-    for mf in glob.glob(os.path.join(root, TL._LOG_DIR, "v*.json")):
-        m = json.load(open(mf))
-        m.pop("rowid_bases_add", None)
-        m.pop("rowid_watermark", None)
-        json.dump(m, open(mf, "w"))
-    assert TL._snapshot(root)["rowid_watermark"] is None
-    legacy = _ids(spark, root)
-    TL.log_append(
-        spark, root, spark.createDataFrame([(60, 6)], "k LONG, val LONG")
-    )
-    st = TL._snapshot(root)
-    assert st["rowid_watermark"] is not None
-    assert set(st["live"]) <= set(st["rowid_bases"])
-    upgraded = _ids(spark, root)
-    assert all(upgraded[k] == v for k, v in legacy.items())
 
 
 def test_rowid_accounting_through_checkpoint_and_clone(spark, root):
@@ -272,10 +255,12 @@ def test_rowid_accounting_through_checkpoint_and_clone(spark, root):
         shutil.rmtree(root + "_c", ignore_errors=True)
 
 
-def test_legacy_trimmed_history_still_refuses(spark, root):
-    """A legacy table (no recorded bases) whose history was trimmed has
-    no way to resolve stable bases — the replay fallback refuses, same
-    as r10."""
+def test_table_without_rowid_accounting_refuses(spark, root):
+    """Every commit records row-id accounting, so a log without it (here
+    simulated by stripping the keys) was not written by this module:
+    row-id reads and the next commit both refuse instead of guessing
+    bases. A commit whose new file's footer cannot be read fails too,
+    rather than publishing without accounting."""
     import glob
     import json
 
@@ -283,15 +268,20 @@ def test_legacy_trimmed_history_still_refuses(spark, root):
     TL.log_append(
         spark, root, spark.createDataFrame([(50, 5)], "k LONG, val LONG")
     )
+    with pytest.raises(OSError):
+        TL._rowid_fields(root, TL._snapshot(root), ["data/missing.parquet"])
     for mf in glob.glob(os.path.join(root, TL._LOG_DIR, "v*.json")):
         m = json.load(open(mf))
         m.pop("rowid_bases_add", None)
         m.pop("rowid_watermark", None)
         json.dump(m, open(mf, "w"))
-    TL.log_vacuum(root, retain_versions=1)
-    assert TL._versions(root)[0] > 0
-    with pytest.raises(ValueError, match="full manifest history"):
+    with pytest.raises(ValueError, match="no row-id accounting"):
         TL.log_read_with_row_ids(spark, root)
+    with pytest.raises(ValueError, match="no row-id accounting"):
+        TL.log_append(
+            spark, root, spark.createDataFrame([(60, 6)], "k LONG, val LONG")
+        )
+    assert TL._latest_version(root) == 1  # nothing published
 
 
 def test_dsv2_with_row_ids_matches_python_api(spark, root):
@@ -363,79 +353,3 @@ def test_rename_on_lineage_table_never_exposes_hidden_column(spark, root):
     ids = _ids(spark, root)
     assert sorted(ids) == list(range(20))
     assert len(set(ids.values())) == 20
-
-
-def test_clone_of_legacy_source_records_bases(spark, root):
-    """r12: cloning a LEGACY source (no commit-time base accounting)
-    whose history is still replayable derives the source bases once and
-    RECORDS them in the clone's v0 — the clone serves the source's ids
-    and keeps serving them after the source log trims."""
-    import glob
-    import json
-
-    _tbl(spark, root)
-    TL.log_append(
-        spark, root, spark.createDataFrame([(50, 5)], "k LONG, val LONG")
-    )
-    for mf in glob.glob(os.path.join(root, TL._LOG_DIR, "v*.json")):
-        m = json.load(open(mf))
-        m.pop("rowid_bases_add", None)
-        m.pop("rowid_watermark", None)
-        json.dump(m, open(mf, "w"))
-    assert TL._snapshot(root)["rowid_watermark"] is None
-    src_ids = _ids(spark, root)
-    dst = tempfile.mkdtemp(prefix="tablelog_clone_legacy_")
-    try:
-        TL.log_clone(root, dst)
-        st = TL._snapshot(dst)
-        assert st["rowid_watermark"] is not None
-        assert set(st["live"]) <= set(st["rowid_bases"])
-        assert _ids(spark, dst) == src_ids
-        # simulate the SOURCE history trimming after the clone: the
-        # clone's recorded bases keep working (no replay of the source)
-        for mf in sorted(glob.glob(
-            os.path.join(root, TL._LOG_DIR, "v*.json")
-        ))[:1]:
-            os.remove(mf)
-        assert _ids(spark, dst) == src_ids
-    finally:
-        shutil.rmtree(dst, ignore_errors=True)
-
-
-def test_clone_of_trimmed_legacy_source_draws_fresh_ids(spark, root):
-    """A legacy source whose history is ALREADY trimmed cannot give the
-    clone ITS bases (they are unknowable — the source itself refuses
-    row-id reads). The clone is a new table with a complete one-commit
-    history, so it assigns fresh deterministic ids from its own v0 —
-    never a crash, never NULLs."""
-    import glob
-    import json
-
-    _tbl(spark, root)
-    TL.log_append(
-        spark, root, spark.createDataFrame([(50, 5)], "k LONG, val LONG")
-    )
-    for mf in glob.glob(os.path.join(root, TL._LOG_DIR, "v*.json")):
-        m = json.load(open(mf))
-        m.pop("rowid_bases_add", None)
-        m.pop("rowid_watermark", None)
-        json.dump(m, open(mf, "w"))
-    # a real retention trim leaves a checkpoint at the floor; the
-    # stripped manifests mean it carries no base accounting either
-    TL.log_checkpoint(root)
-    os.remove(os.path.join(root, TL._LOG_DIR, TL._manifest_name(0)))
-    dst = tempfile.mkdtemp(prefix="tablelog_clone_trimmed_")
-    try:
-        TL.log_clone(root, dst)
-        assert TL._snapshot(dst)["rowid_watermark"] is None
-        ids = _ids(spark, dst)
-        assert sorted(ids) == sorted(
-            list(range(20)) + [50]
-        )  # every row served
-        assert None not in ids.values()
-        assert sorted(ids.values()) == list(range(21))  # dense, unique
-        # and the source itself still refuses (the trimmed contract)
-        with pytest.raises(ValueError, match="full manifest history"):
-            TL.log_read_with_row_ids(spark, root).collect()
-    finally:
-        shutil.rmtree(dst, ignore_errors=True)

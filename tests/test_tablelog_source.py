@@ -711,9 +711,8 @@ def test_stream_sink_second_query_not_mistaken_for_replay(spark, root):
     m1 = TL._read_manifest(tbl, 1)
     assert m0["stream_batch_id"] == m1["stream_batch_id"] == 0
     assert m0["stream_query_key"] != m1["stream_query_key"]
-    # the ledger folds through state: both query keys visible, complete
+    # the ledger folds through state: both query keys visible
     st = TL._snapshot(tbl)
-    assert st["stream_txn_complete"]
     assert st["stream_txn"] == {
         m0["stream_query_key"]: 0,
         m1["stream_query_key"]: 0,
