@@ -99,7 +99,6 @@ def log_merge_cdc(
         return TL._commit(root, 0, manifest)
     state = TL._snapshot(root, base)
     live = state["live"]
-    base_dvs = state["dv"]
     keys = delta.select("pk").distinct()
     # partition-aware probe bound (VERDICT r8 #3, extended to the CDC
     # stream r9): every file records pk min/max stats at write time, so
@@ -117,9 +116,7 @@ def log_merge_cdc(
         )
     affected: list[str] = []
     if probe_files:
-        snap = spark.read.parquet(
-            *[os.path.join(root, f) for f in probe_files]
-        )
+        snap = TL._parquet_reader(spark, root, probe_files, state)
         probe = snap.select("pk", F.input_file_name().alias("_f"))
         affected_abs = {
             r[0]
@@ -141,7 +138,7 @@ def log_merge_cdc(
     if affected:
         # read through any deletion vectors (mixed MoR + CDC histories)
         aff_rows = TL._read_with_dv(
-            spark, root, affected, base_dvs, keep_id=lineage
+            spark, root, affected, state, keep_id=lineage
         )
         if lineage:
             aff_rows = TL._materialize_lineage(

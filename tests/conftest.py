@@ -18,7 +18,12 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", shuffle_partitions=8)
+    # one task slot per core of the host (at most 32, the session
+    # default); SPARK_GRAFT_CPUS still pins the count
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or min(32, os.cpu_count() or 1)
+    s = get_spark(
+        app_name="engine-tests", master=f"local[{cpus}]", shuffle_partitions=8
+    )
     yield s
     s.stop()
 

@@ -401,8 +401,7 @@ def test_footer_stats_equal_the_aggregate(spark, root):
     assert pq.ParquetFile(path).metadata.num_row_groups > 1
     got = stats[files[0]]
     # the reference: the aggregate form footer stats replaced
-    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
-    want = TL._aggregate_file_meta(spark, root, files, types, cols, [])[0][
+    want = TL._aggregate_file_meta(spark, root, files, df.schema, cols, [])[0][
         files[0]
     ]
     for c, v in got.items():
