@@ -805,10 +805,12 @@ def _schema_from_manifest(state: dict):
 
     Field order: the widest recorded schema first, then the fields the
     others add (a metadata-only ADD COLUMN lands after the table's
-    columns). A field recorded under several types takes the type
-    parquet's ``mergeSchema`` gives it (:func:`_merged_type`), so a
-    scan never reads a file as a narrower type than it stores; a
-    ``widen`` override (type widening) wins over every recorded type."""
+    columns); a scan puts the fields its first file stores in that
+    file's order (:func:`_parquet_reader`). A field recorded under
+    several types takes the type parquet's ``mergeSchema`` gives it
+    (:func:`_merged_type`), so a scan never reads a file as a narrower
+    type than it stores; a ``widen`` override (type widening) wins over
+    every recorded type."""
     from pyspark.sql.types import StructField, StructType
 
     widen = state.get("widen") or {}
@@ -2208,8 +2210,8 @@ def log_append(
             "stats_add": new_stats,
             "blooms_add": new_blooms,
             **({"parts_add": new_parts} if new_parts else {}),
-            # cumulative distinct PHYSICAL file schemas: >1 gates the
-            # read path's parquet footer merge (schema evolution)
+            # cumulative distinct PHYSICAL file schemas: merged, they
+            # are the schema every scan reads with (_schema_from_manifest)
             "schemas": sorted(set(cur["schemas"]) | {physical_schema}),
             # this commit's writer schema as given (logical), for history
             "schema": df.schema.simpleString(),
@@ -3967,6 +3969,8 @@ def _log_replace_content(
     the full-sync MERGE / INSERT OVERWRITE shape. Conflicts with any
     concurrent commit (the removed set would be invalidated), so
     CommitConflict propagates."""
+    from pyspark.sql.types import StructType
+
     base = _latest_version(root)
     if base is None:
         raise ValueError(f"no table at {root}")
@@ -3985,6 +3989,19 @@ def _log_replace_content(
     _validate_written_files(
         spark, root, added, df_p.schema, colmap, state["constraints"]
     )
+    # every live file is replaced: a column the content carries keeps
+    # only the new files' type (never merged with a type no live file
+    # holds any more); the fields it lacks stay recorded and read NULL
+    kept = {
+        StructType(
+            [
+                f
+                for f in _type_from_simple_string(s).fields
+                if f.name not in df_p.columns
+            ]
+        ).simpleString()
+        for s in state["schemas"]
+    } - {"struct<>"}
     manifest = {
         "version": base + 1,
         "action": action,
@@ -3996,9 +4013,7 @@ def _log_replace_content(
         "blooms_add": new_blooms,
         **({"parts_add": new_parts} if new_parts else {}),
         **({"colmap": colmap} if colmap is not state["colmap"] else {}),
-        "schemas": sorted(
-            set(state["schemas"]) | {df_p.schema.simpleString()}
-        ),
+        "schemas": sorted(kept | {df_p.schema.simpleString()}),
         "ts": time.time(),
     }
     return _commit(root, base + 1, manifest)
@@ -4981,27 +4996,32 @@ def _split_top_level(text: str) -> list[str]:
 
 
 def _parquet_reader(
-    spark: SparkSession, root: str, files: list[str], state: dict | None
+    spark: SparkSession, root: str, files: list[str], state: dict
 ) -> DataFrame:
-    """Scan ``files`` (root-relative, or absolute refs) with an explicit
-    schema — the one way a table-log read or rewrite scans parquet, so
-    no scan runs Spark's one-task footer-inference job. Table data
-    reads with the snapshot's recorded schema
-    (:func:`_schema_from_manifest`: type-widened columns in their
-    widened type, which Spark 4's parquet readers upcast natively),
-    plus the hidden lineage column when the table materializes it; a
-    field a file does not carry (a metadata-only ADD COLUMN, an
-    evolved column) reads as typed NULL. ``state=None`` reads
-    deletion-vector files, whose schema is fixed."""
-    if state is None:
-        schema = _DV_SCHEMA
-    else:
-        schema = _schema_from_manifest(state)
-        if state["props"].get("row_lineage"):
-            schema = schema.add(_ROWID_COL, "long")
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(root, f) for f in files]
+    """Scan table data ``files`` (root-relative, or absolute refs) of
+    the snapshot ``state`` with an explicit schema — the one way a
+    table-log read or rewrite scans table data, so no scan runs
+    Spark's one-task footer-inference job. The schema is the
+    snapshot's recorded one (:func:`_schema_from_manifest`:
+    type-widened columns in their widened type, which Spark 4's
+    parquet readers upcast natively), plus the hidden lineage column
+    when the table materializes it; a field a file does not carry (a
+    metadata-only ADD COLUMN, an evolved column) reads as typed NULL.
+    Columns come in the order the first file stores them (its footer,
+    read on the driver), then the fields it lacks in recorded order."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    paths = [os.path.join(root, f) for f in files]
+    recorded = _schema_from_manifest(state)
+    stored = pq.read_schema(paths[0]).names if paths else []
+    schema = StructType(
+        [recorded[n] for n in stored if n in recorded.names]
+        + [f for f in recorded.fields if f.name not in stored]
     )
+    if state["props"].get("row_lineage"):
+        schema = schema.add(_ROWID_COL, "long")
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def _read_with_dv(
@@ -5054,9 +5074,13 @@ def _read_with_dv(
         dv_to_data.append(F.lit(os.path.normpath(os.path.join(root, dv))))
         dv_to_data.append(F.lit(os.path.normpath(os.path.join(root, f))))
     path_map = F.create_map(*dv_to_data)
-    all_dv = _parquet_reader(spark, root, list(needed.values()), None).select(
-        path_map[_decoded_file_path_col()].alias("_dv_file"),
-        F.col("row_index"),
+    all_dv = (
+        spark.read.schema(_DV_SCHEMA)
+        .parquet(*[os.path.join(root, dv) for dv in needed.values()])
+        .select(
+            path_map[_decoded_file_path_col()].alias("_dv_file"),
+            F.col("row_index"),
+        )
     )
     # _metadata.file_path is a PERCENT-ENCODED file: URI — decode it to
     # a plain path before comparing with the manifest's decoded paths
@@ -5170,7 +5194,8 @@ def _log_changes_files(
             # ONE scan of all the vectors; each row keyed by the data
             # file its vector belongs to via the broadcast lookup
             return (
-                _parquet_reader(spark, root, [dv for _f, dv in pairs], None)
+                spark.read.schema(_DV_SCHEMA)
+                .parquet(*[os.path.join(root, dv) for _f, dv in pairs])
                 .select(
                     _decoded_file_path_col().alias("_dvp"),
                     F.col("row_index").alias("_ri"),
@@ -5201,7 +5226,7 @@ def _log_changes_files(
     live_add = m.get("live_add", m["add"])
     add = _parquet_reader(spark, root, live_add, state) if live_add else None
     # removed files read as the previous version saw them: an overwrite
-    # or RESTORE commit records only its new files' schemas
+    # or RESTORE commit records only its new files' column types
     rem = (
         _parquet_reader(
             spark, root, m["remove"], _snapshot(root, version - 1)
@@ -6950,11 +6975,8 @@ def _materialize_lineage(
         ],
         "_fpn string, _rid_base long",
     )
-    df = df_keepid
-    if _ROWID_COL not in df.columns:
-        df = df.withColumn(_ROWID_COL, F.lit(None).cast("long"))
     return (
-        df.join(F.broadcast(base_df), "_fpn", "left")
+        df_keepid.join(F.broadcast(base_df), "_fpn", "left")
         .withColumn(
             _ROWID_COL,
             F.coalesce(

@@ -75,6 +75,17 @@ def test_table_log_frames_build_without_spark_jobs(spark, tmp_path):
     )
     assert _rows(read) == [(k, k * 10) for k in range(6)]
 
+    # ADD COLUMN on a one-column table: the recorded `struct<a:string>`
+    # and `struct<k:bigint>` are equally wide, the stored column still
+    # comes first, so a positional INSERT lands in the right columns
+    one = str(tmp_path / "one")
+    TL.log_append(spark, one, spark.range(2).selectExpr("id AS k"))
+    TL.log_add_column(one, "a", "string")
+    read = _built_without_jobs(spark, lambda: TL.log_read(spark, one))
+    assert read.dtypes == [("k", "bigint"), ("a", "string")]
+    TL.log_sql(spark, f"INSERT INTO `{one}` VALUES (5, 'x')")
+    assert _rows(TL.log_read(spark, one)) == [(0, None), (1, None), (5, "x")]
+
     # the CDC state table's live read (the benchmark's point read)
     cdc_root = str(tmp_path / "cdc")
     wire = CDC_WIRE_SCHEMAS["orders"]
@@ -99,6 +110,29 @@ def test_table_log_frames_build_without_spark_jobs(spark, tmp_path):
         spark, lambda: TU.read_live(spark, cdc_root, "orders")
     )
     assert sorted(r["last_offset"] for r in live.collect()) == [0, 1, 3]
+
+
+def test_replace_with_changed_column_type_stays_readable(spark, tmp_path):
+    """CREATE OR REPLACE replaces every live file, so a column the query
+    carries leaves the old type behind: reads and compaction see one
+    type. A column the query lacks still reads as NULL."""
+    root = str(tmp_path / "t")
+    TL.log_append(
+        spark, root, spark.range(3).selectExpr("id AS k", "id * 2 AS v")
+    )
+    TL.log_sql(
+        spark,
+        f"CREATE OR REPLACE TABLE `{root}` AS SELECT CAST(7 AS INT) AS k",
+    )
+    read = TL.log_read(spark, root)
+    assert read.dtypes == [("k", "int"), ("v", "bigint")]
+    assert _rows(read) == [(7, None)]
+    TL.log_compact(spark, root)
+    assert _rows(TL.log_read(spark, root)) == [(7, None)]
+    # the replaced version still reads in its own type
+    old = TL.log_read(spark, root, version=0)
+    assert old.dtypes == [("k", "bigint"), ("v", "bigint")]
+    assert _rows(old) == [(0, 0), (1, 2), (2, 4)]
 
 
 def test_scan_schema_merges_recorded_types_like_merge_schema():
