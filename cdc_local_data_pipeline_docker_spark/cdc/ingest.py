@@ -26,11 +26,13 @@ because the latest-state view dedups replays by (pk, offset).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import parse as P
 
@@ -155,6 +157,16 @@ def quarantine_view(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
     )
 
 
+@functools.cache
+def _changelog_schema(table: str) -> StructType:
+    """The schema the changelog writers produce for ``table``, so a read
+    runs no footer-inference job. It depends only on the table's wire
+    schema, and analyzing the parse plan costs about what the inference
+    job did, so it is analyzed once per process (no job)."""
+    empty = SparkSession.active().createDataFrame([], P.ENVELOPE_DDL)
+    return P.project_changelog(P.parse_events(empty, table), table).schema
+
+
 def materialize_latest(
     spark: SparkSession,
     out_dir: str,
@@ -170,7 +182,9 @@ def materialize_latest(
     from ..catalog import CDC_WIRE_SCHEMAS
     from .latest_state import latest_state  # local import, avoids cycle
 
-    raw = spark.read.parquet(os.path.join(out_dir, f"{table}_parquet"))
+    raw = spark.read.schema(_changelog_schema(table)).parquet(
+        os.path.join(out_dir, f"{table}_parquet")
+    )
     if asof_offset is not None:
         raw = raw.filter(F.col("kafka_offset") <= asof_offset)
     # Reconstruct the parsed shape from the changelog sink columns.

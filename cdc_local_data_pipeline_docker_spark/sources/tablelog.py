@@ -766,39 +766,56 @@ def _to_logical(df: DataFrame, colmap: dict | None) -> DataFrame:
     )
 
 
-def _physical_columns(root: str, state: dict) -> list[str]:
-    """Union of the live files' physical column names (footer-read via
-    pyarrow, first-seen order) PLUS manifest-recorded fields no file
-    carries yet (a metadata-only ADD COLUMN, r13 — without them,
-    entering column-mapping mode via RENAME/DROP would silently drop
-    the added column, and UPDATE SET against it would raise 'not a
-    column' before any write materialized it). Used when a table first
-    enters mapping mode and for unmapped-column validation; production
-    records the physical schema in the manifest instead of touching
-    footers."""
+def _scan_schema(root: str, files: list[str], state: dict):
+    """The PHYSICAL StructType a scan of ``files`` (root-relative, or
+    absolute refs) of the snapshot ``state`` reads with — the one place
+    a table's read schema is decided, for Spark scans
+    (:func:`_parquet_reader`), the ``format("tablelog")`` readers and
+    the writers' column checks. Types are the recorded ones
+    (:func:`_schema_from_manifest`: merged across files, a ``widen``
+    override wins); columns come in the order the first file stores
+    them (its footer, read on the driver — the only footer opened),
+    then the recorded fields that file lacks, so a metadata-only ADD
+    COLUMN lands after the table's columns. The hidden lineage column
+    is left out."""
     import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
 
-    names: list[str] = []
-    # the hidden lineage column must never enter a colmap (ADVICE r11:
-    # seeding it here would make it user-visible/renamable on
-    # column-mapped lineage tables) — same skip as _schema_from_manifest
-    seen: set[str] = {_ROWID_COL}
-    for f in state["live"]:
-        for n in pq.read_schema(os.path.join(root, f)).names:
-            if n not in seen:
-                seen.add(n)
-                names.append(n)
-    for f in _schema_from_manifest(state).fields:
-        if f.name not in seen:
-            seen.add(f.name)
-            names.append(f.name)
-    return names
+    recorded = _schema_from_manifest(state)
+    stored = (
+        pq.read_schema(os.path.join(root, files[0])).names if files else []
+    )
+    return StructType(
+        [recorded[n] for n in stored if n in recorded.names]
+        + [f for f in recorded.fields if f.name not in stored]
+    )
+
+
+def _check_append_types(state: dict, schema) -> None:
+    """Refuse an append of PHYSICAL ``schema`` that would leave the
+    snapshot ``state`` unreadable: the schema set it would record must
+    still resolve to one read type per column (:func:`_merged_type`,
+    so decimal precision growth stays legal), and a type-widened
+    column takes only types that upcast to its widened type. Raises
+    ``ValueError`` naming the column, before anything is written or
+    published — Delta's "Failed to merge incompatible data types"."""
+    _schema_from_manifest(
+        {**state, "schemas": [*state["schemas"], schema.simpleString()]}
+    )
+    widen = state.get("widen") or {}
+    for f in schema.fields:
+        t, w = f.dataType.simpleString(), widen.get(f.name)
+        if w is not None and t != w and not _widening_ok(t, w):
+            raise ValueError(
+                f"column {f.name!r} is widened to {w}; an append of "
+                f"type {t} cannot be read as it"
+            )
 
 
 def _schema_from_manifest(state: dict):
     """The snapshot's PHYSICAL StructType, rebuilt from the manifest's
     recorded schema simpleStrings — the schema every table-log scan
-    reads with (:func:`_parquet_reader`), and the typed empty frame of
+    reads with (:func:`_scan_schema`), and the typed empty frame of
     a version with no live files (VERDICT r10 #1: a hidden-partitioned
     table emptied by a CoW delete is a LEGAL state). The hidden lineage
     column is left out.
@@ -806,7 +823,7 @@ def _schema_from_manifest(state: dict):
     Field order: the widest recorded schema first, then the fields the
     others add (a metadata-only ADD COLUMN lands after the table's
     columns); a scan puts the fields its first file stores in that
-    file's order (:func:`_parquet_reader`). A field recorded under
+    file's order (:func:`_scan_schema`). A field recorded under
     several types takes the type parquet's ``mergeSchema`` gives it
     (:func:`_merged_type`), so a scan never reads a file as a narrower
     type than it stores; a ``widen`` override (type widening) wins over
@@ -967,7 +984,8 @@ def log_rename_column(root: str, old: str, new: str) -> int:
     state = _snapshot(root, base)
     colmap = state["colmap"]
     if colmap is None:
-        colmap = {c: c for c in _physical_columns(root, state)}
+        names = _scan_schema(root, state["live"], state).names
+        colmap = dict(zip(names, names))
     if old not in colmap:
         raise ValueError(f"no such column: {old}")
     if new in colmap:
@@ -1006,7 +1024,8 @@ def log_drop_column(root: str, col: str) -> int:
     state = _snapshot(root, base)
     colmap = state["colmap"]
     if colmap is None:
-        colmap = {c: c for c in _physical_columns(root, state)}
+        names = _scan_schema(root, state["live"], state).names
+        colmap = dict(zip(names, names))
     if col not in colmap:
         raise ValueError(f"no such column: {col}")
     refs = _constraint_references(state["constraints"], col)
@@ -2166,6 +2185,7 @@ def log_append(
                 colmap[c] = p
                 used.add(p)
     pdf = _to_physical_loose(df, colmap)
+    _check_append_types(state0, pdf.schema)
     transforms = None
     if partition_by:
         # transforms are recorded over PHYSICAL names, like stats keys
@@ -2193,6 +2213,7 @@ def log_append(
             raise CommitConflict(
                 "column mapping changed during append — re-prepare"
             )
+        _check_append_types(cur, pdf.schema)  # a concurrent append's types
         if cur["constraints"] != state0["constraints"]:
             # a CHECK constraint landed while we were writing: the
             # validation ran against the OLD set, so committing now
@@ -2448,7 +2469,9 @@ def log_update_where(
     state = _snapshot(root, base)
     colmap = state["colmap"]
     logical_cols = (
-        list(colmap) if colmap else _physical_columns(root, state)
+        list(colmap)
+        if colmap
+        else _scan_schema(root, state["live"], state).names
     )
     for col in assignments:
         if col not in logical_cols:
@@ -3641,7 +3664,9 @@ def log_update_where_mor(
     state = _snapshot(root, base)
     dvs, colmap = state["dv"], state["colmap"]
     logical_cols = (
-        list(colmap) if colmap else _physical_columns(root, state)
+        list(colmap)
+        if colmap
+        else _scan_schema(root, state["live"], state).names
     )
     for col in assignments:
         if col not in logical_cols:
@@ -5001,24 +5026,14 @@ def _parquet_reader(
     """Scan table data ``files`` (root-relative, or absolute refs) of
     the snapshot ``state`` with an explicit schema — the one way a
     table-log read or rewrite scans table data, so no scan runs
-    Spark's one-task footer-inference job. The schema is the
-    snapshot's recorded one (:func:`_schema_from_manifest`:
-    type-widened columns in their widened type, which Spark 4's
-    parquet readers upcast natively), plus the hidden lineage column
-    when the table materializes it; a field a file does not carry (a
-    metadata-only ADD COLUMN, an evolved column) reads as typed NULL.
-    Columns come in the order the first file stores them (its footer,
-    read on the driver), then the fields it lacks in recorded order."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
-
+    Spark's one-task footer-inference job. The schema is
+    :func:`_scan_schema` (type-widened columns in their widened type,
+    which Spark 4's parquet readers upcast natively), plus the hidden
+    lineage column when the table materializes it; a field a file does
+    not carry (a metadata-only ADD COLUMN, an evolved column) reads as
+    typed NULL."""
     paths = [os.path.join(root, f) for f in files]
-    recorded = _schema_from_manifest(state)
-    stored = pq.read_schema(paths[0]).names if paths else []
-    schema = StructType(
-        [recorded[n] for n in stored if n in recorded.names]
-        + [f for f in recorded.fields if f.name not in stored]
-    )
+    schema = _scan_schema(root, files, state)
     if state["props"].get("row_lineage"):
         schema = schema.add(_ROWID_COL, "long")
     return spark.read.schema(schema).parquet(*paths)

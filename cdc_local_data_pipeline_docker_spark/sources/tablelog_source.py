@@ -106,118 +106,32 @@ def _admit_versions(
     return end
 
 
-def _arrow_union_schema(root: str, state: dict):
-    """Union of the live files' footers in first-seen field order (the
-    mergeSchema shape, metadata-only)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    fields: dict[str, object] = {}
-    for f in state["live"]:
-        for fld in pq.read_schema(os.path.join(root, f)):
-            if fld.name == TL._ROWID_COL:
-                continue  # hidden lineage column never surfaces
-            fields.setdefault(fld.name, fld)
-    if fields and state.get("widen"):
-        # TYPE WIDENING (r13): serve the widened type — each file
-        # batch upcasts natively via the per-batch cast in
-        # _file_batches, so old-type and new-type files coexist
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        widened = {
-            f.name: f
-            for f in to_arrow_schema(
-                StructType(
-                    [
-                        fl
-                        for fl in TL._schema_from_manifest(state).fields
-                        if fl.name in state["widen"]
-                    ]
-                )
-            )
-        }
-        fields = {
-            n: widened.get(n, fld) for n, fld in fields.items()
-        }
-    if fields:
-        # metadata-only ADD COLUMN: a field the manifest schema set
-        # records but NO live footer carries reads as typed NULL (the
-        # per-file NULL-fill in _file_batches already handles absence);
-        # mapped tables admit only CURRENT colmap physicals so a dead
-        # dropped-column name never resurfaces through this path
-        want = TL._schema_from_manifest(state)
-        colmap = state["colmap"]
-        keep = (
-            set(colmap.values())
-            if colmap
-            else {fl.name for fl in want.fields}
-        )
-        miss = [
-            fl
-            for fl in want.fields
-            if fl.name in keep and fl.name not in fields
-        ]
-        if miss:
-            from pyspark.sql.pandas.types import to_arrow_schema
-            from pyspark.sql.types import StructType
-
-            for fld in to_arrow_schema(StructType(miss)):
-                fields.setdefault(fld.name, fld)
-    if not fields and state["schemas"]:
-        # emptied-but-existing version (VERDICT r10 #1): no footers to
-        # union — reconstruct from the manifest-recorded schemas
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(TL._schema_from_manifest(state))
-    return pa.schema(list(fields.values()))
-
-
-def _spark_schema(root: str, state: dict):
-    """Logical StructType for the snapshot: physical footer union run
-    through the column mapping (dropped columns never surface)."""
-    from pyspark.sql.pandas.types import from_arrow_schema
+def _out_schema(root: str, state: dict):
+    """(physical column order, LOGICAL StructType) the snapshot serves:
+    the table's scan schema (:func:`TL._scan_schema` — the same types
+    and order ``log_read`` reads with), run through the column mapping
+    in mapping order when one exists (dropped columns never surface)."""
     from pyspark.sql.types import StructField, StructType
 
-    physical = from_arrow_schema(_arrow_union_schema(root, state))
+    physical = TL._scan_schema(root, state["live"], state)
     colmap = state["colmap"]
     if not colmap:
-        return physical
+        return physical.names, physical
     by_name = {f.name: f for f in physical.fields}
-    return StructType(
-        [
-            StructField(logical, by_name[phys].dataType, True)
-            for logical, phys in colmap.items()
-            if phys in by_name
-        ]
+    pairs = [(l, p) for l, p in colmap.items() if p in by_name]
+    return [p for _, p in pairs], StructType(
+        [StructField(l, by_name[p].dataType, True) for l, p in pairs]
     )
-
-
-def _physical_order(root: str, state: dict) -> list[str]:
-    """Physical column names in output order (mapping order when a
-    colmap exists, footer-union order otherwise)."""
-    names = [f.name for f in _arrow_union_schema(root, state)]
-    colmap = state["colmap"]
-    if not colmap:
-        return names
-    return [p for p in colmap.values() if p in set(names)]
 
 
 def _arrow_out_schema(root: str, state: dict):
     """(physical column order, Arrow output schema with LOGICAL names)
     for the snapshot — the typed contract every executor batch is built
-    against (types from the footer union, names from the column map)."""
-    import pyarrow as pa
+    against (:func:`_file_batches` casts each file's columns to it)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    union = _arrow_union_schema(root, state)
-    cols = _physical_order(root, state)
-    colmap = state["colmap"]
-    logical = (
-        {p: l for l, p in colmap.items()} if colmap else {c: c for c in cols}
-    )
-    return cols, pa.schema(
-        [union.field(c).with_name(logical[c]) for c in cols]
-    )
+    cols, logical = _out_schema(root, state)
+    return cols, to_arrow_schema(logical)
 
 
 class _FilePart(InputPartition):
@@ -346,6 +260,21 @@ def _read_file_part(part: _FilePart):
     )
 
 
+def _version_opt(root: str, options) -> int | None:
+    """`version` or `timestampAsOf` (ISO-8601 or epoch seconds —
+    resolved to the latest version committed at or before it, the
+    Delta TIMESTAMP AS OF shape). Both given is an error."""
+    v = options.get("version")
+    tao = options.get("timestampasof")
+    if v is not None and tao is not None:
+        raise ValueError("give version OR timestampAsOf, not both")
+    if v is not None:
+        return int(v)
+    if tao is not None:
+        return TL.version_at_timestamp(root, tao)
+    return None
+
+
 class TablelogDataSource(DataSource):
     """spark.read/readStream.format("tablelog").option("path", root)"""
 
@@ -365,20 +294,6 @@ class TablelogDataSource(DataSource):
             root = unquote(urlparse(root).path)
         return root
 
-    def _version_opt(self, root: str) -> int | None:
-        """`version` or `timestampAsOf` (ISO-8601 or epoch seconds —
-        resolved to the latest version committed at or before it, the
-        Delta TIMESTAMP AS OF shape). Both given is an error."""
-        v = self.options.get("version")
-        tao = self.options.get("timestampasof")
-        if v is not None and tao is not None:
-            raise ValueError("give version OR timestampAsOf, not both")
-        if v is not None:
-            return int(v)
-        if tao is not None:
-            return TL.version_at_timestamp(root, tao)
-        return None
-
     def _cdf(self) -> bool:
         return (
             str(self.options.get("readchangefeed", "false")).lower() == "true"
@@ -386,29 +301,30 @@ class TablelogDataSource(DataSource):
 
     def schema(self):
         root = self._root()
-        state = TL._snapshot(root, self._version_opt(root))
+        state = TL._snapshot(root, _version_opt(root, self.options))
         if not state["live"] and not state["schemas"]:
             raise ValueError(f"no table at {root}")
-        base = _spark_schema(root, state)
-        if not self._cdf():
-            if (
-                str(self.options.get("withrowids", "false")).lower()
-                == "true"
-            ):
-                from pyspark.sql.types import (
-                    LongType,
-                    StructField,
-                    StructType,
-                )
+        from pyspark.sql.types import (
+            LongType,
+            StringType,
+            StructField,
+            StructType,
+            TimestampNTZType,
+        )
 
-                return StructType(
-                    [StructField("_row_id", LongType())] + base.fields
-                )
-            return base
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        _, arrow = _arrow_out_schema(root, state)
-        return from_arrow_schema(_cdf_arrow_schema(arrow))
+        _, base = _out_schema(root, state)
+        if self._cdf():
+            # the _cdf_arrow_schema triplet, as Spark types
+            return (
+                base.add("_change_type", StringType())
+                .add("_commit_version", LongType())
+                .add("_commit_timestamp", TimestampNTZType())
+            )
+        if str(self.options.get("withrowids", "false")).lower() == "true":
+            return StructType(
+                [StructField("_row_id", LongType())] + base.fields
+            )
+        return base
 
     def reader(self, schema):
         if self._cdf():
@@ -444,15 +360,7 @@ class TablelogReader(DataSourceReader):
 
     def __init__(self, root: str, options) -> None:
         self.root = root
-        v = options.get("version")
-        tao = options.get("timestampasof")
-        self.version = (
-            int(v)
-            if v is not None
-            else TL.version_at_timestamp(root, tao)
-            if tao is not None
-            else None
-        )
+        self.version = _version_opt(root, options)
         # ROW TRACKING through the DataSource (r11): emit _row_id as
         # the first column — commit-recorded bases + positions, with a
         # file's materialized lineage ids winning (the
@@ -1217,20 +1125,6 @@ class _FilesWritten(WriterCommitMessage):
         self.blooms = blooms or {}
 
 
-def _arrow_stat_val(v):
-    """Arrow scalar -> the manifest's JSON-stable stat value (mirrors
-    tablelog._json_val: date/datetime -> isoformat, Decimal -> str)."""
-    import datetime
-    import decimal
-
-    v = v.as_py() if hasattr(v, "as_py") else v
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    return v
-
-
 def _partition_value(kind: str, v):
     """The manifest partition value for one source cell (pure Python —
     must agree exactly with the Spark-side transform + dir-value typing
@@ -1398,16 +1292,19 @@ class TablelogWriter(DataSourceArrowWriter):
                     "cannot enforce it; use tablelog.log_append"
                 )
             self.constraints.append((cname, cexpr, conj))
-        # schema enforcement (the Delta append contract): an append that
-        # would WIDEN the table schema is accidental drift unless the
-        # writer opts in with .option("mergeSchema", "true"); overwrite
-        # replaces the schema and is exempt. Absent columns stay legal —
-        # old files already NULL-fill them on read.
+        # schema enforcement (the Delta append contract): an append
+        # must keep the table readable as one type per column, and one
+        # that would WIDEN the table schema is accidental drift unless
+        # the writer opts in with .option("mergeSchema", "true");
+        # overwrite replaces the schema and is exempt. Absent columns
+        # stay legal — old files already NULL-fill them on read.
         merge_ok = (
             str(options.get("mergeschema", "false")).lower() == "true"
         )
+        if not overwrite:
+            TL._check_append_types(state, schema)
         if not overwrite and state["live"] and not merge_ok:
-            existing = set(TL._physical_columns(root, state))
+            existing = TL._scan_schema(root, state["live"], state).names
             new_cols = [
                 f.name for f in schema.fields if f.name not in existing
             ]
@@ -1569,30 +1466,8 @@ class TablelogWriter(DataSourceArrowWriter):
         stats: dict[str, dict] = {}
         parts: dict[str, dict] = {}
         blooms: dict[str, dict] = {}
-        # pkey -> (rel, pq.ParquetWriter, stats_acc, bloom_acc)
+        # pkey -> (rel, pq.ParquetWriter, bloom_acc)
         writers: dict[tuple, tuple] = {}
-
-        def upd_stats(acc, batch):
-            # accumulate RAW Python values (Decimal stays Decimal, date
-            # stays date) so the cross-batch min()/max() merge compares
-            # in the value domain; conversion to the manifest's
-            # JSON-stable form happens ONCE when the final stats dict is
-            # built — a str-converted Decimal would merge
-            # lexicographically ('10.2' < '9.5'). (ADVICE r8)
-            for c in self.stats_cols:
-                if c not in batch.schema.names:
-                    continue
-                col = batch.column(batch.schema.get_field_index(c))
-                if col.null_count == len(col):
-                    continue
-                mm = pc.min_max(col)
-                mn = mm["min"].as_py()
-                mx = mm["max"].as_py()
-                if c in acc:
-                    omn, omx = acc[c]
-                    acc[c] = (min(omn, mn), max(omx, mx))
-                else:
-                    acc[c] = (mn, mx)
 
         def upd_blooms(acc, batch):
             # bloom positions are a SET, so only DISTINCT values hash:
@@ -1652,15 +1527,13 @@ class TablelogWriter(DataSourceArrowWriter):
                             rel,
                             pq.ParquetWriter(ap, sub.schema),
                             {},
-                            {},
                         )
                         parts[rel] = {
                             TL._transform_key(k, n, c): v
                             for (k, n, c), v in zip(self.transforms, pkey)
                         }
-                    rel, w, acc, bacc = writers[pkey]
+                    rel, w, bacc = writers[pkey]
                     w.write_batch(sub)
-                    upd_stats(acc, sub)
                     upd_blooms(bacc, sub)
             else:
                 if () not in writers:
@@ -1669,20 +1542,23 @@ class TablelogWriter(DataSourceArrowWriter):
                         rel,
                         pq.ParquetWriter(ap, batch.schema),
                         {},
-                        {},
                     )
-                rel, w, acc, bacc = writers[()]
+                rel, w, bacc = writers[()]
                 w.write_batch(batch)
-                upd_stats(acc, batch)
                 upd_blooms(bacc, batch)
-        for rel, w, acc, bacc in writers.values():
+        # min/max from each closed file's footer, over the same column
+        # types as _write_data_files (log_append's metadata helper)
+        types = {f.name: f.dataType.typeName() for f in self.schema.fields}
+        stats_cols = [
+            c for c in self.stats_cols if types.get(c) in TL._STATS_TYPES
+        ]
+        for rel, w, bacc in writers.values():
             w.close()
             files.append(rel)
-            if acc:
-                stats[rel] = {
-                    c: [_arrow_stat_val(mn), _arrow_stat_val(mx)]
-                    for c, (mn, mx) in acc.items()
-                }
+            if stats_cols:
+                s = TL._footer_stats(os.path.join(self.root, rel), stats_cols)
+                if s:
+                    stats[rel] = s
             if bacc:
                 blooms[rel] = {
                     c: sorted(int(p) for p in pos)

@@ -115,7 +115,7 @@ def test_state_counts(parsed_orders):
     assert s.n_malformed == 3
 
 
-def test_ingest_resume_and_noop(spark, tmp_path):
+def test_ingest_resume_and_noop(spark, tmp_path, parsed_orders):
     """B.3.6/B.3.7: second run processes only new offsets; third run with
     nothing new is a clean no-op; latest state survives replays."""
     fdir = tmp_path / "events"
@@ -156,9 +156,19 @@ def test_ingest_resume_and_noop(spark, tmp_path):
     )
     assert raw.filter("is_malformed AND raw_value IS NULL").count() == 0
 
+    # the changelog reads with the schema its writers produce (the one
+    # inference finds in the files): building the latest-state frame
+    # starts no Spark job
+    from .test_tablelog_scan_jobs import _built_without_jobs
+
+    assert raw.dtypes == P.project_changelog(parsed_orders, "orders").dtypes
+    latest = _built_without_jobs(
+        spark, lambda: ING.materialize_latest(spark, odir, "orders")
+    )
+
     # latest state over the sink equals the replay oracle
     expected = FX.expected_live_rows(all_events, "orders")
-    state = {r.order_id: r for r in ING.materialize_latest(spark, odir, "orders").collect()}
+    state = {r.order_id: r for r in latest.collect()}
     assert set(state) == set(expected)
     for k in expected:
         assert str(state[k].total_amount) == expected[k]["total_amount"]

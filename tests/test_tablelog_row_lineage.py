@@ -335,7 +335,7 @@ def test_lineage_with_relative_table_root(spark, root):
 
 
 def test_rename_on_lineage_table_never_exposes_hidden_column(spark, root):
-    """ADVICE r11: _physical_columns must skip _tl_row_id — otherwise a
+    """ADVICE r11: _scan_schema must skip _tl_row_id — otherwise a
     rename on a lineage table whose files carry the materialized column
     seeds it into the colmap, making it user-visible and renamable."""
     _tbl(spark, root)
