@@ -10,11 +10,10 @@ write (duplicates on crash). Here:
 
   * offset-bounded resume (S2/S3): high-watermark filter pushed into the
     scan predicate; state JSON per table under <out>/_cdc_state/.
-  * single action: the parquet write; counts/watermark come from the
-    written metrics (observe API-style accumulator via count on the
-    written rows would re-scan — instead the watermark aggregate rides the
-    same plan via a post-write read of the tiny state candidates... no:
-    it's computed driver-side from the one collected summary row).
+  * single action: one changelog write, one Spark job. Row counts and
+    the offset watermark come from an ``Observation`` on that write, and
+    malformed events stay in the changelog (flagged, raw payload kept) as
+    the dead-letter record, so nothing is cached or written a second time.
   * natural partitioning: no coalesce(1) — writers emit one file per task,
     AQE-coalesced for small batches (vs enhanced.py:203).
 
@@ -68,13 +67,13 @@ def ingest_table(
     Returns run metrics {table, n_rows, n_quarantined, high_watermark}.
     Re-running with no new events is a clean no-op (B.3.7).
 
-    Metrics ride the write action via ``observe()`` (accumulator-backed):
-    counts and the offset watermark cost ZERO extra scans — the previous
-    round re-read the full output history per run, a per-run cost that
-    grows with total history (the same flaw class as the reference's
-    5-scans-per-run). The quarantine side-write reuses the cached
-    increment and is skipped entirely when nothing is malformed, so the
-    source is still scanned exactly once per run."""
+    The run is one changelog append and nothing else: one source scan,
+    one Spark job. Counts and the offset watermark ride that write via
+    ``observe()`` (accumulator-backed), so they cost no extra scan and
+    never re-read the output history (the flaw class of the reference's
+    5-scans-per-run). Malformed events are written with the rest,
+    flagged ``is_malformed`` with their raw payload; ``quarantine_view``
+    is the dead-letter view over them."""
     last = read_offset_state(out_dir, table)
     env = P.read_event_file(spark, event_file)
     if last is not None:
@@ -90,38 +89,13 @@ def ingest_table(
     flat = P.project_changelog(parsed, table).sortWithinPartitions("kafka_offset")
 
     obs = Observation(f"ingest_{table}")
-    flat = flat.observe(
+    flat.observe(
         obs,
         F.sum((~F.col("is_malformed")).cast("long")).alias("n"),
         F.sum(F.col("is_malformed").cast("long")).alias("n_bad"),
         F.max("kafka_offset").alias("hw"),
-    )
-    # cache the increment: the quarantine side-write (if any) must not
-    # trigger a second source scan
-    flat = flat.persist()
-    try:
-        out_path = os.path.join(out_dir, f"{table}_parquet")
-        flat.write.mode("append").parquet(out_path)  # the ONE source scan
-        summary = obs.get  # filled by the write action; no extra job
-
-        n_bad = summary["n_bad"] or 0
-        if n_bad:
-            # DLQ parity (U5): malformed rows ALSO land in a segregated
-            # quarantine dir a monitoring system can watch (the reference
-            # gives dead letters their own topic, kafka-topics.json:31-38).
-            # Reads the cached increment — no source re-scan.
-            _, bad = P.split_quarantine(flat)
-            # Each replay of a malformed event appends another stamped
-            # copy; quarantine_view folds copies into a per-event attempt
-            # counter (the batch analogue of Debezium's retry-then-DLQ,
-            # debezium-config.json:25-27 — replay IS the retry here).
-            bad.withColumn(
-                "quarantined_at", F.current_timestamp()
-            ).write.mode("append").parquet(
-                os.path.join(out_dir, f"{table}_quarantine")
-            )
-    finally:
-        flat.unpersist()
+    ).write.mode("append").parquet(os.path.join(out_dir, f"{table}_parquet"))
+    summary = obs.get  # filled by the write action; no extra job
 
     hw = summary["hw"] if summary["hw"] is not None else (last if last is not None else -1)
     n_rows = summary["n"] or 0
@@ -129,29 +103,40 @@ def ingest_table(
     return {
         "table": table,
         "n_rows": n_rows,
-        "n_quarantined": n_bad,
+        "n_quarantined": summary["n_bad"] or 0,
         "high_watermark": hw,
     }
 
 
 def quarantine_view(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
-    """Per-event DLQ state over the append-only quarantine log.
+    """Per-event dead-letter state over the changelog's malformed rows.
 
     Identity is (partition, kafka_offset) — the event's coordinates in
     the source topic. ``n_attempts`` counts how many ingest replays have
-    re-quarantined the event; ``first_seen``/``last_seen`` bracket them.
-    This completes U5 parity with the reference's retry-then-dead-letter
-    flow (debezium-config.json:25-27; kafka-topics.json:31-38): an
-    operator watches rows whose n_attempts keeps growing — those need a
-    schema fix or manual redaction, exactly like a poisoned DLQ topic.
-    One aggregation over a (tiny) malformed-only log; no state file."""
-    q = spark.read.parquet(os.path.join(out_dir, f"{table}_quarantine"))
+    written the event again; ``first_seen``/``last_seen`` are the
+    earliest and latest modification times of the changelog files that
+    hold a copy, i.e. when each copy landed. This completes U5 parity
+    with the reference's retry-then-dead-letter flow
+    (debezium-config.json:25-27; kafka-topics.json:31-38): an operator
+    watches rows whose n_attempts keeps growing — those need a schema
+    fix or manual redaction, exactly like a poisoned DLQ topic.
+
+    Works on the changelog of either ingest path (batch ``ingest_table``
+    or the streaming file sink) and yields no rows when nothing was
+    malformed. Caveat: ``cdc.compact.compact_changelog`` rewrites the
+    files, so after a compaction both times read the compaction time;
+    ``n_attempts`` and the kept payloads are unchanged by it."""
+    landed = F.col("_metadata.file_modification_time")
     return (
-        q.groupBy("partition", "kafka_offset")
+        spark.read.schema(_changelog_schema(table))
+        .parquet(os.path.join(out_dir, f"{table}_parquet"))
+        .filter(F.col("is_malformed"))
+        .select("partition", "kafka_offset", landed.alias("landed_at"))
+        .groupBy("partition", "kafka_offset")
         .agg(
             F.count(F.lit(1)).alias("n_attempts"),
-            F.min("quarantined_at").alias("first_seen"),
-            F.max("quarantined_at").alias("last_seen"),
+            F.min("landed_at").alias("first_seen"),
+            F.max("landed_at").alias("last_seen"),
         )
         .orderBy("partition", "kafka_offset")
     )
@@ -161,8 +146,7 @@ def quarantine_view(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
 def _changelog_schema(table: str) -> StructType:
     """The schema the changelog writers produce for ``table``, so a read
     runs no footer-inference job. It depends only on the table's wire
-    schema, and analyzing the parse plan costs about what the inference
-    job did, so it is analyzed once per process (no job)."""
+    schema, so the parse plan is analyzed once per process (no job)."""
     empty = SparkSession.active().createDataFrame([], P.ENVELOPE_DDL)
     return P.project_changelog(P.parse_events(empty, table), table).schema
 

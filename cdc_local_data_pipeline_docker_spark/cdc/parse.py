@@ -3,15 +3,16 @@
 The reference's parse chain (kafka_to_s3_enhanced.py:146-190) is:
 binary→string cast (P1), `from_json` with a hand-declared per-table
 StructType (P2/P3), struct-field projection with Kafka metadata (P4/P5).
-This module reproduces that chain as ONE lazy plan and adds what the
-reference lacks:
+This module reproduces that chain as two SQL projections with a single
+``from_json`` and adds what the reference lacks:
 
   * type recovery — DECIMAL(10,2)-as-string → DecimalType(10,2) and
     epoch-µs long → timestamp (SURVEY.md §1.3), so downstream money math is
     exact instead of string/double;
-  * a quarantine side-channel (U5) — rows whose value is non-null but fails
-    `from_json` are routed to a dead-letter DataFrame instead of silently
-    nulling (the reference would write null-struct rows);
+  * dead letters (U5) — rows whose value is non-null but fails
+    `from_json` are flagged ``is_malformed`` with their raw payload kept,
+    instead of silently nulling (the reference would write null-struct
+    rows); the changelog that keeps them is the dead-letter record;
   * tombstone awareness (U3) — null-value records are kept, flagged, and
     carry their key so latest-state can apply the delete.
 
@@ -60,61 +61,48 @@ def read_event_file(spark: SparkSession, path: str) -> DataFrame:
 def parse_events(df: DataFrame, table: str) -> DataFrame:
     """Parse the envelope for one table: key/value JSON → typed columns.
 
-    Output: pk, data struct (recovered types), kafka metadata, flags
-    (is_tombstone, is_malformed). One projection, no shuffle."""
+    Output: pk, row struct (recovered types), kafka metadata, flags
+    (is_tombstone, is_malformed) and the raw payload of malformed rows.
+    Two SQL projections with a single ``from_json``, no shuffle; the
+    exact-type casts (SURVEY.md §4 item 2: decimal strings →
+    DECIMAL(10,2), epoch-µs longs → timestamp_ntz on the UTC timeline)
+    sit inside the ``row`` struct."""
     wire = CDC_WIRE_SCHEMAS[table]
     pk = CDC_PRIMARY_KEYS[table]
+    decs = CDC_DECIMAL_COLUMNS[table]
+    epochs = CDC_EPOCH_MICROS_COLUMNS[table]
+    fields = []
+    for f in wire.fields:
+        src = f"data.`{f.name}`"
+        if f.name in decs:
+            src = f"cast({src} as {CDC_DECIMAL_TYPE.simpleString()})"
+        elif f.name in epochs:
+            src = f"cast(timestamp_micros({src}) as timestamp_ntz)"
+        fields.append(f"'{f.name}', {src}")
     # PERMISSIVE from_json yields an all-null struct for unparseable input
     # (it never returns a null struct in Spark 4), so "malformed" is
     # detected as: value present but the PK field didn't materialize — a
     # change event without its key is garbage by definition.
-    malformed = F.col("value").isNotNull() & F.from_json("value", wire).getField(
-        pk
-    ).isNull()
-    parsed = df.select(
-        F.get_json_object("key", f"$.{pk}").cast("int").alias("pk"),
-        F.from_json("value", wire).alias("data"),
-        F.col("value").isNull().alias("is_tombstone"),
-        malformed.alias("is_malformed"),
-        # original payload retained for malformed rows only → DLQ replay
-        F.when(malformed, F.col("value")).alias("raw_value"),
-        F.col("topic"),
-        F.col("partition"),
-        F.col("offset").alias("kafka_offset"),
-        F.timestamp_millis(F.col("timestamp")).alias("kafka_timestamp"),
-    )
-    return recover_types(parsed, table)
-
-
-def recover_types(parsed: DataFrame, table: str) -> DataFrame:
-    """Exact-type cast layer (SURVEY.md §4 item 2): decimal strings →
-    DECIMAL(10,2), epoch-µs longs → timestamp_ntz (UTC timeline)."""
-    decs = CDC_DECIMAL_COLUMNS[table]
-    epochs = CDC_EPOCH_MICROS_COLUMNS[table]
-    wire = CDC_WIRE_SCHEMAS[table]
-    fields = []
-    for f in wire.fields:
-        src = F.col(f"data.{f.name}")
-        if f.name in decs:
-            fields.append(src.cast(CDC_DECIMAL_TYPE).alias(f.name))
-        elif f.name in epochs:
-            fields.append(
-                F.expr(
-                    f"cast(timestamp_micros(data.{f.name}) as timestamp_ntz)"
-                ).alias(f.name)
-            )
-        else:
-            fields.append(src.alias(f.name))
-    return parsed.select(
+    malformed = f"`value` IS NOT NULL AND data.`{pk}` IS NULL"
+    return df.selectExpr(
+        f"cast(get_json_object(`key`, '$.{pk}') as int) AS pk",
+        f"from_json(`value`, '{wire.simpleString()}') AS data",
+        "`value`",
+        "`topic`",
+        "`partition`",
+        "`offset`",
+        "`timestamp`",
+    ).selectExpr(
         "pk",
-        F.struct(*fields).alias("row"),
-        "is_tombstone",
-        "is_malformed",
-        "raw_value",
-        "topic",
-        "partition",
-        "kafka_offset",
-        "kafka_timestamp",
+        f"named_struct({', '.join(fields)}) AS `row`",
+        "`value` IS NULL AS is_tombstone",
+        f"{malformed} AS is_malformed",
+        # original payload retained for malformed rows only → DLQ replay
+        f"CASE WHEN {malformed} THEN `value` END AS raw_value",
+        "`topic`",
+        "`partition`",
+        "`offset` AS kafka_offset",
+        "timestamp_millis(`timestamp`) AS kafka_timestamp",
     )
 
 
@@ -152,14 +140,14 @@ def project_changelog(parsed: DataFrame, table: str) -> DataFrame:
     over the at-rest changelog can apply deletes (fixing U3: the
     reference's sink cannot express deletion at all)."""
     wire = CDC_WIRE_SCHEMAS[table]
-    return parsed.select(
+    return parsed.selectExpr(
         "pk",
-        *[F.col(f"row.{f.name}").alias(f.name) for f in wire.fields],
+        *[f"`row`.`{f.name}` AS `{f.name}`" for f in wire.fields],
         "is_tombstone",
         "is_malformed",
         "raw_value",
         "kafka_timestamp",
-        "topic",
-        "partition",
+        "`topic`",
+        "`partition`",
         "kafka_offset",
     )

@@ -26,18 +26,32 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import CDC_WIRE_SCHEMAS
 from ..cdc import parse as P
+from ..cdc.ingest import _changelog_schema
+
+
+def _state_columns(table: str) -> list[str]:
+    wire = CDC_WIRE_SCHEMAS[table]
+    return ["pk", *[f.name for f in wire.fields], "is_tombstone",
+            "partition", "kafka_offset"]
+
+
+def _state_schema(table: str) -> StructType:
+    """The schema ``_merge_latest`` writes: the changelog delta's state
+    columns. Reading the state table with it runs no footer-inference
+    job."""
+    changelog = _changelog_schema(table)
+    return StructType([changelog[c] for c in _state_columns(table)])
 
 
 def _merge_latest(state: DataFrame, delta: DataFrame, table: str) -> DataFrame:
     """latest-wins over (existing state ∪ new changes); state rows carry
     their original (partition, kafka_offset) so replayed deltas lose ties
     deterministically."""
-    wire = CDC_WIRE_SCHEMAS[table]
-    cols = ["pk", *[f.name for f in wire.fields], "is_tombstone",
-            "partition", "kafka_offset"]
+    cols = _state_columns(table)
     both = state.select(cols).unionByName(delta.select(cols))
     w = Window.partitionBy("pk").orderBy(
         F.col("partition").desc(), F.col("kafka_offset").desc()
@@ -101,7 +115,8 @@ def read_state(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
     """Live rows of the maintained state table (tombstone markers hidden)."""
     wire = CDC_WIRE_SCHEMAS[table]
     return (
-        spark.read.parquet(state_table_path(out_dir, table))
+        spark.read.schema(_state_schema(table))
+        .parquet(state_table_path(out_dir, table))
         .filter(~F.col("is_tombstone"))
         .select("pk", *[f.name for f in wire.fields], "kafka_offset")
     )
@@ -117,7 +132,6 @@ def start_upsert_stream(
     incrementally (one merge per micro-batch, atomic swap)."""
     path = state_table_path(out_dir, table)
     _recover_state(path)  # a crashed previous run may have left no live dir
-    wire = CDC_WIRE_SCHEMAS[table]
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         _recover_state(path)  # restore the snapshot if a swap was cut short
@@ -126,7 +140,7 @@ def start_upsert_stream(
             P.parse_events(batch_df, table), table
         ).filter(~F.col("is_malformed"))
         if os.path.exists(path):
-            state = sess.read.parquet(path)
+            state = sess.read.schema(_state_schema(table)).parquet(path)
         else:
             state = sess.createDataFrame([], delta.schema)
         merged = _merge_latest(state, delta, table)

@@ -9,8 +9,15 @@ import decimal
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
-from cdc_local_data_pipeline_docker_spark.catalog import CDC_PRIMARY_KEYS
+from cdc_local_data_pipeline_docker_spark.catalog import (
+    CDC_DECIMAL_COLUMNS,
+    CDC_DECIMAL_TYPE,
+    CDC_EPOCH_MICROS_COLUMNS,
+    CDC_PRIMARY_KEYS,
+    CDC_WIRE_SCHEMAS,
+)
 from cdc_local_data_pipeline_docker_spark.cdc import fixtures as FX
 from cdc_local_data_pipeline_docker_spark.cdc import ingest as ING
 from cdc_local_data_pipeline_docker_spark.cdc import latest_state as LS
@@ -28,6 +35,69 @@ def fixture_dir(tmp_path_factory):
 def parsed_orders(spark, fixture_dir):
     env = P.read_event_file(spark, f"{fixture_dir}/orders.jsonl")
     return P.parse_events(env, "orders")
+
+
+def _ref_parse_events(df, table):
+    """Reference parse: the Column-API form ``parse.parse_events`` had
+    before it became two SQL projections with one ``from_json``."""
+    wire = CDC_WIRE_SCHEMAS[table]
+    pk = CDC_PRIMARY_KEYS[table]
+    malformed = F.col("value").isNotNull() & F.from_json("value", wire).getField(
+        pk
+    ).isNull()
+    parsed = df.select(
+        F.get_json_object("key", f"$.{pk}").cast("int").alias("pk"),
+        F.from_json("value", wire).alias("data"),
+        F.col("value").isNull().alias("is_tombstone"),
+        malformed.alias("is_malformed"),
+        F.when(malformed, F.col("value")).alias("raw_value"),
+        F.col("topic"),
+        F.col("partition"),
+        F.col("offset").alias("kafka_offset"),
+        F.timestamp_millis(F.col("timestamp")).alias("kafka_timestamp"),
+    )
+    fields = []
+    for f in wire.fields:
+        src = F.col(f"data.{f.name}")
+        if f.name in CDC_DECIMAL_COLUMNS[table]:
+            fields.append(src.cast(CDC_DECIMAL_TYPE).alias(f.name))
+        elif f.name in CDC_EPOCH_MICROS_COLUMNS[table]:
+            fields.append(
+                F.expr(
+                    f"cast(timestamp_micros(data.{f.name}) as timestamp_ntz)"
+                ).alias(f.name)
+            )
+        else:
+            fields.append(src.alias(f.name))
+    return parsed.select(
+        "pk", F.struct(*fields).alias("row"), "is_tombstone", "is_malformed",
+        "raw_value", "topic", "partition", "kafka_offset", "kafka_timestamp",
+    )
+
+
+def _ref_project_changelog(parsed, table):
+    wire = CDC_WIRE_SCHEMAS[table]
+    return parsed.select(
+        "pk", *[F.col(f"row.{f.name}").alias(f.name) for f in wire.fields],
+        "is_tombstone", "is_malformed", "raw_value", "kafka_timestamp",
+        "topic", "partition", "kafka_offset",
+    )
+
+
+def _assert_parse_parity(env, table):
+    """``parse_events`` and ``project_changelog`` give the reference's
+    schemas (nullability included) and rows, with one ``from_json``."""
+    parsed = P.parse_events(env, table)
+    analyzed = parsed._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("from_json(") == 1, analyzed
+    ref = _ref_parse_events(env, table)
+    for got, want in (
+        (parsed, ref),
+        (P.project_changelog(parsed, table), _ref_project_changelog(ref, table)),
+    ):
+        assert got.schema == want.schema
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
 
 def test_fixture_generator_deterministic(tmp_path):
@@ -70,8 +140,9 @@ def test_unknown_json_fields_ignored(spark, tmp_path):
                     "topic": "t", "partition": 0, "offset": 0,
                     "timestamp": 0}) + "\n"
     )
-    parsed = P.parse_events(P.read_event_file(spark, str(path)), "customers")
-    r = parsed.first()
+    env = P.read_event_file(spark, str(path))
+    _assert_parse_parity(env, "customers")
+    r = P.parse_events(env, "customers").first()
     assert not r.is_malformed
     assert r.row.email == "x@y.z"
 
@@ -86,10 +157,12 @@ def test_quarantine_split(spark, parsed_orders):
 
 @pytest.mark.parametrize("table", list(CDC_PRIMARY_KEYS))
 def test_latest_state_matches_replay_oracle(spark, fixture_dir, table):
-    """Latest-wins + delete application vs the hand-replayed event list."""
+    """Latest-wins + delete application vs the hand-replayed event list;
+    the parse matches the Column-API reference on every topic."""
     events = FX.generate_table_events(table)
     expected = FX.expected_live_rows(events, table)
     env = P.read_event_file(spark, f"{fixture_dir}/{table}.jsonl")
+    _assert_parse_parity(env, table)
     state = LS.latest_state(P.parse_events(env, table), table)
     rows = {getattr(r, CDC_PRIMARY_KEYS[table]): r for r in state.collect()}
     assert set(rows) == set(expected)
@@ -187,12 +260,51 @@ def test_reference_parity_projection(spark, fixture_dir):
     assert flat.filter("order_id IS NULL").count() == 0
 
 
+def _dump_events(path, events):
+    with open(path, "w") as f:
+        for e in events:
+            f.write(json.dumps({k: v for k, v in e.items() if k != "_kind"}) + "\n")
+
+
+def test_ingest_is_one_job_and_changelog_keeps_dead_letters(spark, tmp_path):
+    """An increment carrying malformed events is one changelog write:
+    one Spark job, no separate quarantine directory. quarantine_view
+    reads the dead letters from the changelog, and a table that never
+    received a malformed event has none."""
+    import os
+
+    from .test_tablelog_scan_jobs import _jobs_of
+
+    events = FX.generate_table_events("orders")
+    assert all(e["_kind"] != "malformed" for e in events[:30])
+    odir = str(tmp_path / "wh")
+    _dump_events(tmp_path / "run1.jsonl", events[:30])
+    ING.ingest_table(spark, str(tmp_path / "run1.jsonl"), "orders", odir)
+    assert ING.quarantine_view(spark, odir, "orders").collect() == []
+
+    _dump_events(tmp_path / "full.jsonl", events)
+    m, jobs = _jobs_of(
+        spark,
+        lambda: ING.ingest_table(spark, str(tmp_path / "full.jsonl"), "orders", odir),
+    )
+    n_bad = sum(1 for e in events if e["_kind"] == "malformed")
+    assert m["n_quarantined"] == n_bad > 0
+    assert len(jobs) == 1
+    assert not os.path.exists(os.path.join(odir, "orders_quarantine"))
+    qv = ING.quarantine_view(spark, odir, "orders").collect()
+    assert [r.kafka_offset for r in qv] == [
+        e["offset"] for e in events if e["_kind"] == "malformed"
+    ]
+    assert all(r.n_attempts == 1 for r in qv)
+
+
 def test_ingest_no_history_scan_and_quarantine_sink(spark, tmp_path):
     """Round-2 fixes: (a) run metrics ride the write action via observe()
     — proven by DELETING the written history between runs: if bookkeeping
     re-scanned the output dir the second run would crash or miscount;
-    (b) malformed rows land in a segregated <table>_quarantine dir (DLQ
-    parity, U5) and are excluded from latest-state."""
+    (b) malformed rows stay in the changelog, flagged with their raw
+    payload (DLQ parity, U5): quarantine_view finds exactly them, and
+    they are excluded from latest-state."""
     import os
     import shutil
 
@@ -202,9 +314,7 @@ def test_ingest_no_history_scan_and_quarantine_sink(spark, tmp_path):
     fdir.mkdir()
 
     p1 = fdir / "run1.jsonl"
-    with open(p1, "w") as f:
-        for e in events[:30]:
-            f.write(json.dumps({k: v for k, v in e.items() if k != "_kind"}) + "\n")
+    _dump_events(p1, events[:30])
     m1 = ING.ingest_table(spark, str(p1), "orders", odir)
     assert m1["high_watermark"] == 29
 
@@ -213,30 +323,29 @@ def test_ingest_no_history_scan_and_quarantine_sink(spark, tmp_path):
     shutil.rmtree(os.path.join(odir, "orders_parquet"))
 
     p2 = fdir / "full.jsonl"
-    with open(p2, "w") as f:
-        for e in events:
-            f.write(json.dumps({k: v for k, v in e.items() if k != "_kind"}) + "\n")
+    _dump_events(p2, events)
     m2 = ING.ingest_table(spark, str(p2), "orders", odir)
     inc = events[30:]
-    n_bad = sum(1 for e in inc if e["_kind"] == "malformed")
+    bad_offsets = {e["offset"] for e in inc if e["_kind"] == "malformed"}
+    n_bad = len(bad_offsets)
+    assert n_bad  # the fixture's malformed events sit past offset 30
     assert m2["high_watermark"] == len(events) - 1
     assert m2["n_rows"] == len(inc) - n_bad
     assert m2["n_quarantined"] == n_bad
 
-    # quarantine sink: exactly the malformed increment rows, envelope kept
-    qdir = os.path.join(odir, "orders_quarantine")
-    if n_bad:
-        q = spark.read.parquet(qdir)
-        assert q.count() == n_bad
-        assert q.filter("NOT is_malformed").count() == 0
-        assert q.filter("raw_value IS NULL").count() == 0
-        # quarantined rows never surface in latest-state
-        state_ids = {
-            r.order_id for r in ING.materialize_latest(spark, odir, "orders").collect()
-        }
-        assert None not in state_ids
-    else:  # fixture always has malformed rows past offset 30, but guard
-        assert not os.path.exists(qdir)
+    # dead letters: exactly the malformed increment rows, payload kept
+    qv = ING.quarantine_view(spark, odir, "orders").collect()
+    assert {r.kafka_offset for r in qv} == bad_offsets
+    bad = (
+        spark.read.schema(ING._changelog_schema("orders"))
+        .parquet(os.path.join(odir, "orders_parquet"))
+        .filter("is_malformed")
+    )
+    assert bad.count() == n_bad
+    assert bad.filter("raw_value IS NULL").count() == 0
+    # quarantined rows never surface in latest-state
+    state = ING.materialize_latest(spark, odir, "orders").collect()
+    assert not {r.last_offset for r in state} & bad_offsets
 
 
 def test_quarantine_replay_accumulates_attempts(spark, tmp_path):

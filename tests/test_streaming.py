@@ -128,12 +128,21 @@ def test_stream_cdc_ingest_checkpoint_resume(spark, tmp_path):
     n3 = spark.read.parquet(f"{out_dir}/orders_parquet").count()
     assert n3 == len(events)
 
-    # the changelog feeds the same latest-state materialization
-    from cdc_local_data_pipeline_docker_spark.cdc.ingest import materialize_latest
+    # the changelog feeds the same latest-state materialization, and its
+    # flagged malformed rows are the dead-letter view (the file sink
+    # writes no separate quarantine directory)
+    from cdc_local_data_pipeline_docker_spark.cdc.ingest import (
+        materialize_latest,
+        quarantine_view,
+    )
 
     expected = FX.expected_live_rows(events, "orders")
     state = {r.order_id for r in materialize_latest(spark, out_dir, "orders").collect()}
     assert state == set(expected)
+    qv = quarantine_view(spark, out_dir, "orders").collect()
+    assert [(r.kafka_offset, r.n_attempts) for r in qv] == [
+        (e["offset"], 1) for e in events if e["_kind"] == "malformed"
+    ]
 
 
 def test_multi_topic_single_query_fan_out(spark, tmp_path):

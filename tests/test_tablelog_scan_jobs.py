@@ -21,17 +21,24 @@ from cdc_local_data_pipeline_docker_spark.streaming import (
 )
 
 
-def _built_without_jobs(spark, build):
-    """Run ``build`` inside a fresh job group; assert it started no
-    Spark job and return the frame it built."""
+def _jobs_of(spark, fn):
+    """Run ``fn`` inside a fresh job group; return its result and the
+    ids of the Spark jobs it started."""
     sc = spark.sparkContext
-    group = f"frame-build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "frame build")
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
     try:
-        df = build()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _built_without_jobs(spark, build):
+    """Run ``build``; assert it started no Spark job and return the
+    frame it built."""
+    df, jobs = _jobs_of(spark, build)
+    assert jobs == []
     return df
 
 
